@@ -33,6 +33,16 @@ object VectorOps {
       array(items.map(i => col(s"`$i`").cast("double")): _*).as("features"))
   }
 
+  /** `computeSVD` without U, serialized: the JVM ARPACK port it calls
+    * keeps its solver work state in shared statics, so two concurrent
+    * solves corrupt each other ("No shifts could be applied", index out
+    * of bounds). Every SVD in this object runs under this one lock.
+    */
+  private def serialSvd(mat: org.apache.spark.mllib.linalg.distributed.RowMatrix, k: Int) =
+    SvdLock.synchronized(mat.computeSVD(k, computeU = false))
+
+  private object SvdLock
+
   /** M2: 2-component PCA scores (U·S scaling, matching the reference's
     * `np.linalg.svd` usage: mean-center columns, SVD, coords = U[:,:2]*S[:2]).
     * Sign of each component is arbitrary — consumers must compare
@@ -61,12 +71,16 @@ object VectorOps {
     }.cache()
     CacheRegistry.trackRdd(centered)
     val mat = new RowMatrix(centered.values.map(OldVectors.dense))
-    val svd = mat.computeSVD(2, computeU = false)
+    val svd = serialSvd(mat, math.min(2, dim))
     // `centered` is materialized by the SVD's actions — `rows` is no
     // longer needed by anything downstream
     rows.unpersist(blocking = false)
-    val v = svd.V // dim x 2
-    val bV = spark.sparkContext.broadcast((0 until dim).map(i => (v(i, 0), v(i, 1))).toArray)
+    // dim x (at most 2): a rank-deficient matrix (one vote column, or
+    // constant columns) yields fewer components; a missing one scores 0,
+    // as its zero singular value does in the reference's full SVD
+    val v = svd.V
+    def comp(i: Int, j: Int) = if (j < v.numCols) v(i, j) else 0.0
+    val bV = spark.sparkContext.broadcast((0 until dim).map(i => (comp(i, 0), comp(i, 1))).toArray)
     import spark.implicits._
     centered.map { case (id, c) =>
       val vv = bV.value
@@ -128,8 +142,8 @@ object VectorOps {
     CacheRegistry.trackRdd(centered)
     // request at most `dim` components: computeSVD refuses k > numCols,
     // and dim = 1 is a legitimate degenerate input the audit must survive
-    val svd = new RowMatrix(centered.values.map(OldVectors.dense))
-      .computeSVD(math.min(2, dim), computeU = false)
+    val svd = serialSvd(new RowMatrix(centered.values.map(OldVectors.dense)),
+      math.min(2, dim))
     rows.unpersist(blocking = false)
     val v = svd.V
     // rank-deficient input (dim = 1, or a zero/constant matrix whose

@@ -6,7 +6,8 @@ import graft.sources.{ParquetCache, PspSchemas, UnlReader}
 
 /** One electoral period's tables — the reference's `PeriodData`
   * (`models/tisk_models.py:54-79`) as a bundle of DataFrames instead of
-  * in-memory Polars frames.
+  * in-memory Polars frames. [[PeriodLoader.load]] materializes every
+  * table, so the bundle is resident like the reference's frames.
   */
 case class PeriodData(
     period: Int,
@@ -27,6 +28,16 @@ case class PeriodData(
   *   <root>/schuze/{schuze,bod_schuze}.unl
   *   <root>/tisky/tisky.unl
   * }}}
+  *
+  * Each of the five period tables is materialized once, here, with an
+  * eager `localCheckpoint` (MEMORY_AND_DISK: blocks spill to disk under
+  * memory pressure instead of being lost). Its lineage is cut, so a
+  * request scans resident blocks instead of re-parsing the windows-1250
+  * dump and rebuilding `mpInfo`/`tiskLookup`; load and refresh pay that
+  * cost once. A refresh swaps in a new, already materialized
+  * `PeriodData`. The old one is never unpersisted explicitly — a request
+  * still running on it would lose its blocks — the ContextCleaner frees
+  * them once nothing references it.
   */
 object PeriodLoader {
 
@@ -44,24 +55,26 @@ object PeriodLoader {
     val mps = read("poslanci", "poslanec.unl", PspSchemas.poslanec)
     val organs = read("poslanci", "organy.unl", PspSchemas.organy)
     val member = read("poslanci", "zarazeni.unl", PspSchemas.zarazeni)
-    val votes = read(s"hl-$period", "hl*s.unl", PspSchemas.hlHlasovani)
-    val mpVotes = read(s"hl-$period", "hl*h*.unl", PspSchemas.hlPoslanec)
+    val votes = resident(read(s"hl-$period", "hl*s.unl", PspSchemas.hlHlasovani))
+    val mpVotes = resident(read(s"hl-$period", "hl*h*.unl", PspSchemas.hlPoslanec))
     // new periods may not have a void file yet - the reference substitutes
     // an empty frame (data_reader.py:314-327)
-    val voids =
+    val voids = resident(
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$root/hl-$period/zmatecne.unl")))
         read(s"hl-$period", "zmatecne.unl", PspSchemas.zmatecne)
       else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PspSchemas.zmatecne)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PspSchemas.zmatecne))
     val sessions = read("schuze", "schuze.unl", PspSchemas.schuze)
     val bods = read("schuze", "bod_schuze.unl", PspSchemas.bodSchuze)
     val tisky = read("tisky", "tisky.unl", PspSchemas.tisky)
 
-    val mpInfo = MpBuilder.buildMpInfo(period, mps, persons, organs, member)
-    val lookup = TiskLookup.build(period, votes, sessions, bods, tisky)
+    val mpInfo = resident(MpBuilder.buildMpInfo(period, mps, persons, organs, member))
+    val lookup = resident(TiskLookup.build(period, votes, sessions, bods, tisky))
     PeriodData(period, votes, mpVotes, voids, mpInfo, lookup)
   }
+
+  private def resident(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 }
 
 /** The reference's serving API surface (routes → services) as one

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.psp.{Amendments, Analyzer, Coalitions, Details, LawsBrowser}
@@ -209,13 +209,25 @@ class GraftServer(
   /** `middleware.run_with_timeout` parity: run the compute off-thread and
     * 504 if it exceeds the route budget. `timeoutMillis` lets tests scale
     * budgets down.
+    *
+    * A 504 also stops the call's Spark work: the compute thread runs its
+    * jobs in a per-call job group that interrupts tasks on cancel, and a
+    * timeout cancels that group's running jobs and any it submits later
+    * (planning may outlive the thread interrupt and submit one after).
     */
   private def withTimeout[A](budgetMillis: Long, label: String)(f: => A): A = {
-    val task: java.util.concurrent.Callable[A] = () => f
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val group = s"graft-serving-${java.util.UUID.randomUUID()}"
+    val task: java.util.concurrent.Callable[A] = () => {
+      sc.foreach(_.setJobGroup(group, label, interruptOnCancel = true))
+      try f finally sc.foreach(_.clearJobGroup())
+    }
     val fut = computePool.submit(task)
     try fut.get(timeoutMillis(budgetMillis), TimeUnit.MILLISECONDS)
     catch {
       case _: TimeoutException =>
+        sc.foreach(_.cancelJobGroupAndFutureJobs(group, s"$label timed out"))
         fut.cancel(true)
         throw HttpError(504, s"$label timed out")
       case e: java.util.concurrent.ExecutionException =>

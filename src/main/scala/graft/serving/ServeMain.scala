@@ -17,7 +17,8 @@ object ServeMain {
     val root = args(0)
     val periodIds = args(1).split(',').map(_.trim.toInt).toSeq
     val port = if (args.length > 2) args(2).toInt else 8080
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,6 +1,5 @@
 package graft.psp
 
-import java.nio.charset.Charset
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
@@ -10,41 +9,8 @@ import graft.SparkSpec
   */
 class PeriodLoaderSpec extends SparkSpec {
 
-  private lazy val root: Path = {
-    val cp1250 = Charset.forName("windows-1250")
-    val dir = Files.createTempDirectory("psp-root")
-    def w(sub: String, name: String, lines: Seq[String]): Unit = {
-      val d = dir.resolve(sub); Files.createDirectories(d)
-      Files.write(d.resolve(name), lines.mkString("\n").getBytes(cp1250))
-    }
-    w("poslanci", "osoby.unl", Seq(
-      "101||Novák|Jan||1970-01-01|M||",
-      "103||Dvořák|Karel||1972-02-02|M||",
-      "104||Černý|Ondřej||1974-03-03|M||",
-      "106||Bílý|Tomáš||1976-04-04|M||"))
-    w("poslanci", "poslanec.unl", Seq(
-      "1|101|1|1|174|||||||||||", "3|103|1|1|174|||||||||||",
-      "4|104|1|1|174|||||||||||", "6|106|1|1|174|||||||||||"))
-    w("poslanci", "organy.unl", Seq(
-      "200|0|1|ANO2011|Klub ANO||2021-01-01||1|0|",
-      "201|0|1|ODS|Klub ODS||2021-01-01||1|0|"))
-    w("poslanci", "zarazeni.unl", Seq(
-      "101|200|0|2021-01-01|||||", "103|201|0|2021-01-01|||||",
-      "104|201|0|2021-01-01|||||", "106|201|0|2021-01-01|||||"))
-    w("hl-10", "hl10s.unl", Seq(
-      "1|174|1|1|1|2024-01-10|10:00|2|1|0|0|3|2|N|A|První hlasování|PH1|",
-      "2|174|1|2|1|2024-01-11|10:00|3|0|0|0|3|2|N|A|Druhé hlasování|PH2|"))
-    w("hl-10", "hl10h1.unl", Seq(
-      "1|1|A", "3|1|B", "4|1|A", "6|1|A",
-      "1|2|A", "3|2|A", "4|2|A", "6|2|A"))
-    w("hl-10", "zmatecne.unl", Seq.empty)
-    w("schuze", "schuze.unl", Seq("900|174|1|2024-01-01|||"))
-    w("schuze", "bod_schuze.unl", Seq(
-      "1|900|410|1|1|Bod jedna||||||||5|"))
-    w("tisky", "tisky.unl", Seq(
-      "410|1|1|100|1|1|174|174|1|Vláda|Návrh zákona|2024-01-01||||1||||||||"))
-    dir
-  }
+  private lazy val root: Path =
+    Fixtures.writeUnlDump(Files.createTempDirectory("psp-root"))
 
   test("load + full analyzer catalog over UNL files") {
     val data = PeriodLoader.load(spark, root.toString, 10)
@@ -72,5 +38,54 @@ class PeriodLoaderSpec extends SparkSpec {
     val d2 = PeriodLoader.load(spark, root.toString, 10, Some(cache.toString))
     assert(d2.votes.count() == 2)
     assert(Files.list(cache).count() > 0)
+  }
+
+  test("a loaded period is resident: every Analyzer route answers the " +
+      "same rows after the dump directory is deleted") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.abs
+    val dir = Fixtures.writeUnlDump(Files.createTempDirectory("psp-resident"))
+    val an = new Analyzer(PeriodLoader.load(spark, dir.toString, 10))
+    val amendIds = Seq(1L, 2L).toDF("id_hlasovani")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def answers(): Map[String, Seq[String]] = {
+      val (agreement, rebels, cohesion) = an.coalitions(amendIds)
+      Map(
+        "loyalty" -> rows(an.loyalty()),
+        "attendance" -> rows(an.attendance()),
+        // PCA signs are arbitrary: compare magnitudes
+        "pca" -> rows(an.pcaCoords().select($"mp_name", $"party", abs($"x"), abs($"y"))),
+        "similarity" -> rows(an.crossPartySimilarity()),
+        "votes" -> rows(an.listVotes(search = Some("prvni"))),
+        "vote_detail" -> rows(an.voteDetail(1L)),
+        "vote_mp_votes" -> rows(an.voteMpVotes(1L)),
+        "agreement" -> rows(agreement),
+        "rebels" -> rows(rebels),
+        "cohesion" -> rows(cohesion),
+        "stats" -> rows(an.periodStats()),
+        "tisk_lookup" -> rows(an.data.tiskLookup))
+    }
+    val before = answers()
+    assert(before("loyalty").exists(_.contains("Dvořák")))
+    assert(before("tisk_lookup").size == 1)
+    Fixtures.deleteTree(dir)
+    assert(!Files.exists(dir))
+    assert(answers() == before)
+  }
+
+  test("a re-load after the dump changed reads the new files") {
+    val dir = Fixtures.writeUnlDump(Files.createTempDirectory("psp-reload"))
+    def dvorakRebellion(d: PeriodData): Double =
+      new Analyzer(d).loyalty().collect()
+        .find(_.getAs[String]("prijmeni") == "Dvořák").get
+        .getAs[Double]("rebellion_pct")
+    val first = PeriodLoader.load(spark, dir.toString, 10)
+    assert(dvorakRebellion(first) == 50.0)
+    Fixtures.writeUnl(dir, "hl-10", "hl10h1.unl",
+      Fixtures.UnlMpVotes.map { case "3|1|B" => "3|1|A"; case l => l })
+    assert(dvorakRebellion(PeriodLoader.load(spark, dir.toString, 10)) == 0.0)
+    // the earlier snapshot is untouched by the re-load
+    assert(dvorakRebellion(first) == 50.0)
   }
 }

@@ -47,4 +47,64 @@ class AnalysisCacheSpec extends AnyFunSuite {
     assert(cache.get("loyalty:10:a").isEmpty)
     assert(cache.get("attendance:10:c").contains(3))
   }
+
+  /** Runs `n` threads that start together on `body`; their outcomes. */
+  private def together[A](n: Int)(body: => A): Seq[Either[Throwable, A]] = {
+    val start = new java.util.concurrent.CyclicBarrier(n)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val futures = (1 to n).map { _ =>
+        pool.submit(() => { start.await(); scala.util.Try(body).toEither })
+      }
+      futures.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+  }
+
+  test("concurrent misses of one key run the compute once") {
+    val cache = new AnalysisCache[Int]()
+    val computes = new java.util.concurrent.atomic.AtomicInteger()
+    val got = together(8) {
+      cache.getOrCompute("loyalty:10:30:") {
+        computes.incrementAndGet()
+        Thread.sleep(300)
+        42
+      }
+    }
+    assert(got == Seq.fill(8)(Right(42)))
+    assert(computes.get == 1)
+  }
+
+  test("a failed compute reaches every waiter, is not cached, and is " +
+      "retried on the next call") {
+    val cache = new AnalysisCache[Int]()
+    val got = together(4) {
+      cache.getOrCompute("pca:10") {
+        Thread.sleep(300)
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(got.forall(_.left.exists(_.getMessage == "boom")), got)
+    assert(cache.get("pca:10").isEmpty)
+    assert(cache.getOrCompute("pca:10")(7) == 7)
+    assert(cache.get("pca:10").contains(7))
+  }
+
+  test("an invalidation during a compute keeps its result out of the " +
+      "cache and lets later callers start afresh") {
+    val cache = new AnalysisCache[Int]()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val old = new Thread(() => {
+      cache.getOrCompute("loyalty:10:30:") { started.countDown(); release.await(); 1 }
+      ()
+    })
+    old.start()
+    started.await()
+    assert(cache.invalidatePrefix("loyalty:10:") == 0)
+    // not joined to the computation over the invalidated data
+    assert(cache.getOrCompute("loyalty:10:30:")(2) == 2)
+    release.countDown()
+    old.join()
+    assert(cache.get("loyalty:10:30:").contains(2))
+  }
 }

@@ -2,9 +2,10 @@ package graft.serving
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.psp.{Analyzer, Fixtures, PeriodData}
+import graft.psp.{Analyzer, Fixtures, PeriodData, PeriodLoader}
 
 /** End-to-end serving-layer spec: starts the HTTP server on fixture data
   * and mirrors the reference's `tests/api/test_api_endpoints.py`
@@ -66,9 +67,9 @@ class GraftServerSpec extends SparkSpec {
     super.afterAll()
   }
 
-  private def get(path: String): HttpResponse[String] =
+  private def get(path: String, at: String = base): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+      HttpRequest.newBuilder(URI.create(at + path)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
   test("health returns ok with loaded periods (test_health_returns_ok)") {
@@ -398,6 +399,68 @@ class GraftServerSpec extends SparkSpec {
     assert(server.cache.get("loyalty:1:9:").isEmpty)
     // the swapped catalog serves immediately
     assert(get("/api/loyalty?period=1&top=9").statusCode() == 200)
+  }
+
+  test("load → analyze → serve from a UNL dump over HTTP; a refresh " +
+      "after the dump changed serves the new file") {
+    val dir = Fixtures.writeUnlDump(Files.createTempDirectory("psp-serve"))
+    def catalog() = PeriodCatalog(new Analyzer(PeriodLoader.load(spark, dir.toString, 10)))
+    val srv = new GraftServer(Map(10 -> catalog())).start()
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      val before = get("/api/loyalty?period=10", at)
+      assert(before.statusCode() == 200)
+      // Dvořák votes against his club on one of two votes
+      assert(before.body().contains("Dvořák"))
+      assert(before.body().contains("\"rebellion_pct\":50.0"))
+      Seq("/api/attendance?period=10", "/api/votes?period=10&search=prvni",
+        "/api/votes/1?period=10", "/api/stats?period=10")
+        .foreach(path => assert(get(path, at).statusCode() == 200, path))
+      Fixtures.writeUnl(dir, "hl-10", "hl10h1.unl",
+        Fixtures.UnlMpVotes.map { case "3|1|B" => "3|1|A"; case l => l })
+      assert(srv.refreshPeriod(10, catalog()) >= 1)
+      val after = get("/api/loyalty?period=10", at)
+      assert(after.statusCode() == 200)
+      assert(after.body().contains("Dvořák"))
+      assert(!after.body().contains("\"rebellion_pct\":50.0"), after.body())
+    } finally srv.stop()
+  }
+
+  test("a 504 cancels the Spark jobs of the call that timed out") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // two seconds per MP-vote row, read in tasks (the repartition keeps
+    // the optimizer from evaluating it over the local fixture rows): an
+    // uncancelled loyalty analysis runs long past the waits below
+    val slow = udf { (v: String) => Thread.sleep(2000); v }.asNondeterministic()
+    val cat = fixtureCatalog()
+    val d = cat.analyzer.data
+    val slowCat = cat.copy(analyzer = new Analyzer(d.copy(
+      mpVotes = d.mpVotes.repartition(4).withColumn("vysledek", slow(col("vysledek"))))))
+    // without adaptive execution the query runs as one job the compute
+    // thread waits on, like an RDD job: interrupting the thread alone
+    // leaves that job running (adaptive execution cancels its stages
+    // when the thread is interrupted mid-plan)
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeBefore = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    val srv = new GraftServer(Map(1 -> slowCat), timeoutMillis = _ => 1).start()
+    try {
+      val r = get("/api/loyalty?period=1", s"http://127.0.0.1:${srv.boundPort}")
+      assert(r.statusCode() == 504)
+      // time for the call's planning to reach Spark; then, this test's
+      // server being its only user, Spark must go idle within seconds
+      Thread.sleep(2000)
+      val tracker = spark.sparkContext.statusTracker
+      def busy = tracker.getActiveJobIds.nonEmpty ||
+        tracker.getExecutorInfos.exists(_.numRunningTasks > 0)
+      val deadline = System.nanoTime() + 5000L * 1000 * 1000
+      while (busy && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(tracker.getActiveJobIds.isEmpty)
+      assert(tracker.getExecutorInfos.forall(_.numRunningTasks == 0))
+    } finally {
+      srv.stop()
+      aqeBefore.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
   }
 
   test("detail cache keys invalidate with their period") {
