@@ -1,30 +1,52 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
+/** One timing window: elapsed seconds, and how much of it was GC pause,
+  * JIT compile time and janino compiles — the one-shot JVM costs that made
+  * identical bytecode swing ±80% between recorded rounds. Janino
+  * source-compiles run synchronously on the driver thread and are
+  * invisible to the GC and JIT beans: a codegen-cache miss mid-window
+  * shows up as elapsed time with gc≈0 and jit≈0 (the r12 q60 stall
+  * shape), so its count makes a recompile storm attributable.
+  */
+final case class JvmWindow(secs: Double, gcSecs: Double, jitSecs: Double,
+    janino: Long)
+
+object JvmWindow {
+  private val jitBean = ManagementFactory.getCompilationMXBean
+
+  private def gcMillis: Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+  private def jitMillis: Long =
+    if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
+      jitBean.getTotalCompilationTime else 0L
+  private def janinoCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Runs `body` and returns its result with its window. */
+  def measure[A](body: => A): (A, JvmWindow) = {
+    val gc0 = gcMillis; val jit0 = jitMillis; val jan0 = janinoCount
+    val t0 = System.nanoTime()
+    val a = body
+    (a, JvmWindow((System.nanoTime() - t0) / 1e9, (gcMillis - gc0) / 1e3,
+      (jitMillis - jit0) / 1e3, janinoCount - jan0))
+  }
+
+  /** The JVM warm-up every timed run starts with, so the first measured
+    * query is not charged for it.
+    */
+  def warmUp(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.range(2000000).selectExpr("sum(id * 2)").collect()
+}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: the full query catalog generates far more
-      // codegen classes than that per pass, so pass 2 would janino- and
-      // JIT-recompile every stage instead of reusing the loaded (already
-      // hot) classes. Sized to hold the whole catalog's stages — re-raised
-      // in round 9: at 5000 the grown catalog evicted q72's classes
-      // between passes (BENCH_r08: q72 steady window carried 3.8 s of
-      // jit_sec in PASS 2 — the compile-free pass — while its isolated
-      // BenchProbe floor stayed at the audited 2.4-2.7 s).
-      .config("spark.sql.codegen.cache.maxEntries", "12000")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JIT/codegen warmup so the first measured query isn't charged for it
-    spark.range(2000000).selectExpr("sum(id * 2)").collect()
+    val spark = GraftSession.build()
+    JvmWindow.warmUp(spark)
     spark.read.parquet(s"$sfDir/nation.parquet").count()
     // Two passes over the catalog at the TARGET SF. Instrumented evidence
     // (r5): with a 48 GiB heap, one-shot q60 carried 22 s of JIT compiler
@@ -36,62 +58,44 @@ object Bench {
     // Steady-state is what the reference's deployment shape (a
     // long-lived serving session) actually runs; both numbers are in the
     // artifact so neither story hides the other.
-    // per-query JVM hygiene instrumentation: how much of each timing
-    // window was GC pause and JIT compilation (the two one-shot costs
-    // that made identical bytecode swing ±80% between recorded rounds)
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMillis(): Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime else 0L
-    // janino source-compiles run synchronously ON THE DRIVER THREAD and
-    // are invisible to both beans above — a codegen-cache miss
-    // mid-window shows up as elapsed time with gc≈0 and jit≈0 (the r12
-    // q60 mystery-stall shape, and the lead suspect for the r18 q200
-    // pass-2 excursion: the judge's fresh-JVM probe put 426 janino
-    // compiles under the one slow repeat). Counting it per window makes
-    // a recompile storm attributable from the artifact alone.
-    def janinoCount(): Long = org.apache.spark.metrics.source
-      .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-    // per-window measurement record: elapsed (negative iff the query
-    // FAILED — the ok flag is the authoritative read; the sign is kept
-    // only so legacy pass-line consumers can't mistake a failure for a
-    // speedup), plus the three JVM-lifecycle attributions
-    case class W(name: String, secs: Double, ok: Boolean,
-                 gcSecs: Double, jitSecs: Double, janino: Long)
+    // per-window measurement record: the query's window plus its ok flag
+    case class W(name: String, ok: Boolean, t: JvmWindow) {
+      // elapsed, negative iff the query FAILED — the ok flag is the
+      // authoritative read; the sign is kept only so legacy pass-line
+      // consumers can't mistake a failure for a speedup
+      def secs: Double = if (ok) t.secs else -t.secs
+      def gcSecs: Double = t.gcSecs
+      def jitSecs: Double = t.jitSecs
+      def janino: Long = t.janino
+    }
 
-    // one catalog pass; the cache drain and GC happen OUTSIDE the
-    // timing window (bookkeeping, not query cost — the GC keeps one
-    // query's garbage from surfacing as a collection pause inside a
-    // LATER query's window, which produced the r2 one-shot spikes)
-    def runPass(): Seq[W] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val gc0 = gcMillis()
-        val jit0 = jitMillis()
-        val jan0 = janinoCount()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-          }
-        val secs = (System.nanoTime() - t0) / 1e9
-        val gcSecs = (gcMillis() - gc0) / 1e3
-        val jitSecs = (jitMillis() - jit0) / 1e3
-        val jan = janinoCount() - jan0
-        // BLOCKING drain: a non-blocking unpersist's block removal can
-        // still be in flight when the next window opens, and the
-        // eviction churn bleeds into a heavy successor's measured time
-        // (r17: the shingle-pair tiers q186/q192 spiked to 17.8/35.9 s
-        // in ONE catalog run while their fresh-JVM probe floors stayed
-        // 2.9/6.5 s tight) — waiting here keeps each window honest
+    // one timed query; the cache drain and GC happen OUTSIDE the timing
+    // window (bookkeeping, not query cost — the GC keeps one query's
+    // garbage from surfacing as a collection pause inside a LATER
+    // query's window, which produced the r2 one-shot spikes). Failures
+    // are caught so a late one (e.g. OOM after two full passes) cannot
+    // abort main before the summary lines print.
+    def timeQuery(name: String): W = {
+      val (ok, t) = JvmWindow.measure {
+        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+        }
+      }
+      // BLOCKING drain: a non-blocking unpersist's block removal can
+      // still be in flight when the next window opens, and the
+      // eviction churn bleeds into a heavy successor's measured time
+      // (r17: the shingle-pair tiers q186/q192 spiked to 17.8/35.9 s
+      // in ONE catalog run while their fresh-JVM probe floors stayed
+      // 2.9/6.5 s tight) — waiting here keeps each window honest
+      try {
         graft.operators.CacheRegistry.drain(blocking = true)
         System.gc()
-        W(name, if (ok) secs else -secs, ok, gcSecs, jitSecs, jan)
-      }
+      } catch { case _: Throwable => () }
+      W(name, ok, t)
+    }
+    def runPass(): Seq[W] = SparkEntry.queries.keys.toSeq.sorted.map(timeQuery)
 
     def objOf(vals: Seq[(String, Double)]): String =
       vals.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -100,8 +104,7 @@ object Bench {
     // silently evicted once a CodeHeap fills) is only diagnosable from
     // the artifact if the fill level rides it
     def poolsLine(label: String): Unit = {
-      val pools = java.lang.management.ManagementFactory
-        .getMemoryPoolMXBeans.asScala
+      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
         .filter(p => p.getName.contains("CodeHeap") ||
           p.getName.contains("Metaspace"))
         .map { p =>
@@ -143,9 +146,8 @@ object Bench {
     // #7: with 3 and a band-riding mechanism, min-of-3 is one unlucky
     // run from a false breach), so a watched_steady excursion
     // self-attributes from the same JSON line instead of needing a
-    // separate BenchProbe session. Each repeat is Try-guarded like
-    // runPass so a late failure (e.g. OOM after two full passes)
-    // cannot abort main before the summary lines print.
+    // separate `Probe time` session. Each repeat is a timeQuery window,
+    // guarded like runPass's.
     // WINDOW DEFINITION (changed r18, disclosed): the timed span is
     // the query alone; the cache drain + GC now happen OUTSIDE it —
     // the same convention as runPass's windows. r17 floor-probe values
@@ -160,34 +162,13 @@ object Bench {
     // outlier) self-attributes from the artifact instead of needing a
     // separate fresh-JVM probe session.
     val floorProbe = "q192_dedup_drain_capstone"
-    val floorRuns: Seq[(Double, Boolean, Double, Double, Long)] =
-      (1 to 5).map { _ =>
-        val gc0 = gcMillis(); val jit0 = jitMillis()
-        val jan0 = janinoCount()
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(floorProbe)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] floor probe FAILED: ${e.getMessage}")
-            false
-          }
-        val secs = (System.nanoTime() - t0) / 1e9
-        val gcS = (gcMillis() - gc0) / 1e3
-        val jitS = (jitMillis() - jit0) / 1e3
-        val jan = janinoCount() - jan0
-        try {
-          graft.operators.CacheRegistry.drain(blocking = true)
-          System.gc()
-        } catch { case _: Throwable => () }
-        (secs, ok, gcS, jitS, jan)
-      }
-    def arr(f: ((Double, Boolean, Double, Double, Long)) => String): String =
-      floorRuns.map(f).mkString("[", ",", "]")
+    val floorRuns = (1 to 5).map(_ => timeQuery(floorProbe))
+    def arr(f: W => String): String = floorRuns.map(f).mkString("[", ",", "]")
     val floorAttrJson =
-      s""""sec":${arr(r => f"${r._1}%.2f")},"ok":${arr(r => r._2.toString)},""" +
-        s""""gc_sec":${arr(r => f"${r._3}%.2f")},""" +
-        s""""jit_sec":${arr(r => f"${r._4}%.2f")},""" +
-        s""""janino":${arr(r => r._5.toString)}"""
+      s""""sec":${arr(r => f"${r.t.secs}%.2f")},"ok":${arr(r => r.ok.toString)},""" +
+        s""""gc_sec":${arr(r => f"${r.gcSecs}%.2f")},""" +
+        s""""jit_sec":${arr(r => f"${r.jitSecs}%.2f")},""" +
+        s""""janino":${arr(r => r.janino.toString)}"""
     val floorJson =
       s""""watched_floor_probe":{"$floorProbe":{$floorAttrJson}},"""
     val qs = objOf(results.map(w => w.name -> w.secs))
@@ -256,7 +237,7 @@ object Bench {
       qObj(pass, run)(vals.filter(_.ok).sortBy(-_.secs).take(5))
     // queries with an ordered performance bar (q91 ≤ 0.7 s steady —
     // re-baselined in round 10 from the r6 verdict's 0.5 after three
-    // rounds of straddling: the isolated BenchProbe floor over 16
+    // rounds of straddling: the isolated `Probe time` floor over 16
     // repeats settles in a 0.54-0.67 s band (recorded run: tail-8 reads
     // 0.54/0.57/0.58/0.60/0.61/0.62/0.62/0.65/0.66/0.67) and catalog
     // steady readings r7-r10 span 0.43-0.65, so both 0.5 AND 0.6 sit
@@ -279,7 +260,7 @@ object Bench {
       // (r16, per the r15 verdict order) shingles ONCE — the after
       // closure re-keys the persisted before-pass shingle sets instead
       // of re-deriving them, which collapsed the old 10-24 s scatter
-      // band to a tight floor: 10-repeat BenchProbe steady
+      // band to a tight floor: 10-repeat `Probe time` steady
       // 6.4-7.5 s (gc ≤ 0.06, janino 0), cold 16.9-19.1 s, one
       // post-cold repeat can ride the C2 backlog of the ~157
       // cold-compiled classes (worst observed 57.8 s with jit 18.3 s).
@@ -293,7 +274,7 @@ object Bench {
       "q192_dedup_drain_capstone",
       // the knob-pick capstone recomputes all five sweep relations it
       // decides over (q191 pair tier + q194 IVF dominate) — BY DESIGN
-      // the catalog's second most expensive plan. 6-repeat BenchProbe
+      // the catalog's second most expensive plan. 6-repeat `Probe time`
       // floor 10.0-10.9 s steady (gc <= 0.15, janino drains to 0 by
       // repeat 6), in-catalog steady 13.4 s under pass-2 pressure:
       // treat ~18 s steady as the regression bar
@@ -302,7 +283,7 @@ object Bench {
       // q195's signature tier + q202 + q203 by design: 3-repeat probe
       // floor 7.4-9.1 s; same ~18 s steady regression bar as q200
       "q206_knob_pick_extension",
-      // standing q60 watch (r14 verdict order #6): BenchProbe floor
+      // standing q60 watch (r14 verdict order #6): `Probe time` floor
       // 2.0-2.5 s steady, but its recorded history (r5/r12/r14 —
       // cold 24.84 s in BENCH_r14, the largest cold entry ever) is
       // compile-storm swings; its steady AND cold splits ride the

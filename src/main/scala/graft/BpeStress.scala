@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for BPE merge learning: per-merge amortized cost of
@@ -39,15 +38,7 @@ object BpeStress {
     val numMerges = args.headOption.map(_.toInt).getOrElse(192)
     val sizes = (if (args.length > 1) args(1) else "1000000,10000000")
       .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     import graft.operators.{Bpe, CacheRegistry}
 
     // uniform: every word appears exactly 3× — digit symmetry makes the

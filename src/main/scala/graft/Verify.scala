@@ -1,33 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (local iteration only; the driver passes 2): a
-    // comma-separated allowlist of query names to dump
+    // comma-separated allowlist of query names to dump — with
+    // tools/check_correctness.py over <outDir>, the one-query oracle loop
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — read as long, converted
-      // in graft.sources.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write micros (not INT96) so the driver's comparator sees the same
-      // physical type DuckDB produces
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // static conf: hold the whole catalog's generated classes (default
-      // 100 evicts/recompiles shared plan shapes across a full-catalog run)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
+    // write micros (not INT96) so the driver's comparator sees the same
+    // physical type DuckDB produces
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -107,7 +107,7 @@ object CacheRegistry {
 
   /** [[drain]] with the blocking choice explicit. Serving paths want
     * `blocking = false` (never stall a request on block removal);
-    * MEASUREMENT paths (Bench/BenchProbe) want `blocking = true`, so
+    * MEASUREMENT paths (Bench/Probe) want `blocking = true`, so
     * one query's async eviction cannot still be in flight — competing
     * for executor CPU and storage locks — when the NEXT query's timing
     * window opens (drain already runs outside the window; blocking

@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `SparkContext.setCheckpointDir` and every [[cut]] becomes a reliable
   * `Dataset.checkpoint` — the GraphX/GraphFrames practice. The tradeoff
   * is one distributed-store write + read per cut: measured by
-  * [[graft.LineageProbe]] (2M-node PageRank, local disk as the store)
+  * `Probe lineage` (2M-node PageRank, local disk as the store)
   * at ~1.1× whole-loop vs localCheckpoint (PERFORMANCE.md, round 9);
   * on a real cluster the store is replicated HDFS/object storage and
   * the multiple grows with replication and network cost — the price of

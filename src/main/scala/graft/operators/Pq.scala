@@ -127,7 +127,8 @@ object Pq {
     * bytecode grew linearly with `m·k` (and with `nprobe·m·k` in the
     * IVFADC rankers) until janino hit its method limits at ~4k
     * branches and Spark silently fell back to interpreted rows
-    * (measured: CodegenProbe, PERFORMANCE.md round-13 table). The
+    * (measured: PERFORMANCE.md round-13 table; PlanQualitySpec's
+    * IVFADC flat-LUT arm pins k=256 inside whole-stage codegen). The
     * array-literal LUT has no such cliff — k=256 costs the same
     * bytecode as k=4 — while keeping the same exact decimal constants,
     * so the engine-exact ranking contract is unchanged.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Conditional-sum "profile" aggregations — the attendance-histogram shape
@@ -26,21 +26,4 @@ object Profiles {
     } :+ count(lit(1)).as("total_cnt")
     df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
-
-  /** Overall mean + conditional mean (reference cohesion metric,
-    * `coalition_service.py:269-281`): `avg(value)` and
-    * `avg(value) FILTER (cond)` — Spark's `avg` ignores the nulls produced
-    * by `when(cond, value)`, matching Polars' conditional-mean semantics.
-    */
-  def conditionalMeans(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: Column,
-      cond: Column,
-      overallName: String = "mean_all",
-      condName: String = "mean_cond"): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(
-        avg(valueCol).as(overallName),
-        avg(when(cond, valueCol)).as(condName))
 }

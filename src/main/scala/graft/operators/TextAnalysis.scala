@@ -419,11 +419,6 @@ object TextAnalysis {
         min(col("win_min")).as("min_fp"),
         max(col("win_min")).as("max_fp"))
 
-  def rollingHash(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, w) =>
-      (acc * lit(31L) + xxhash64(w).bitwiseAND(lit(0xffffffffL)))
-        .bitwiseAND(lit(0xffffffffffffL)))
-
   // --------------------------------------------- line-level boilerplate
 
   /** (doc, line_no, line, trimmed) long-form line relation — one codegen

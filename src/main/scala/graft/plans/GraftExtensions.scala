@@ -2,8 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftShim, SparkSession, SparkSessionExtensions}
 
-/** SparkSessionExtensions installer: `SparkSession.builder
-  * .withExtensions(new GraftExtensions)` — or config
+/** SparkSessionExtensions installer: `graft.GraftSession.build` passes it
+  * to `withExtensions` — or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Injects the graft native functions so they are usable from SQL text as

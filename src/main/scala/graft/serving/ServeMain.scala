@@ -1,7 +1,5 @@
 package graft.serving
 
-import org.apache.spark.sql.SparkSession
-
 import graft.psp.{Analyzer, PeriodLoader}
 
 /** Runnable serving entry point (the reference's `main_frontend.py`):
@@ -17,18 +15,7 @@ object ServeMain {
     val root = args(0)
     val periodIds = args(1).split(',').map(_.trim.toInt).toSeq
     val port = if (args.length > 2) args(2).toInt else 8080
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // psp.cz UNL dumps are windows-1250 (Spark 4 charset allowlist)
-      .config("spark.sql.legacy.javaCharsets", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val periods = periodIds.map { p =>
       p -> PeriodCatalog(new Analyzer(PeriodLoader.load(spark, root, p)))
     }.toMap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,20 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf: the suite runs hundreds of distinct plans in one
-      // JVM; the default 100-entry codegen class cache evicts and
-      // recompiles constantly (same fix as Bench/Verify, round 6)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The factory's session on 4 cores: every suite runs on the settings
+    * the mains run on.
+    */
+  lazy val session: SparkSession = GraftSession.build(cpus = 4)
 }
