@@ -269,29 +269,6 @@ object VectorOps {
     * (`similarity_service.py:84`). Optional member-attribute join for a
     * cross-group filter (e.g. `party_a != party_b`).
     */
-  /** cosinePairsTopK with a member-attribute constraint: join a small
-    * attrs table (memberCol, attrCol) and keep only pairs whose attribute
-    * values are BOTH non-null and different (the reference's cross-party
-    * filter, `similarity_service.py:96`), applied before top-k.
-    */
-  def cosinePairsTopKFiltered(
-      df: DataFrame, memberCol: String, itemCol: String, valueCol: String,
-      attrs: DataFrame, attrCol: String, requireDifferentAttr: Boolean,
-      k: Int): DataFrame = {
-    val all = cosinePairs(df, memberCol, itemCol, valueCol)
-    val withAttrs = all
-      .join(broadcast(attrs.select(col(memberCol).as("m_a"), col(attrCol).as("attr_a"))), Seq("m_a"))
-      .join(broadcast(attrs.select(col(memberCol).as("m_b"), col(attrCol).as("attr_b"))), Seq("m_b"))
-      .filter(col("attr_a").isNotNull && col("attr_b").isNotNull)
-    val filtered =
-      if (requireDifferentAttr) withAttrs.filter(col("attr_a") =!= col("attr_b"))
-      else withAttrs
-    filtered
-      .orderBy(col("cosine").desc, col("m_a").asc, col("m_b").asc)
-      .limit(k)
-      .select("m_a", "m_b", "cosine")
-  }
-
   /** All member-pair cosines in long form (no top-k yet). */
   def cosinePairs(
       df: DataFrame, memberCol: String, itemCol: String, valueCol: String): DataFrame = {

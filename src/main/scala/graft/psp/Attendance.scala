@@ -28,8 +28,13 @@ object Attendance {
       mpInfo: DataFrame,
       top: Int = 30,
       sort: String = "worst",
-      partyFilter: Option[String] = None): DataFrame = {
+      partyFilter: Option[String] = None): DataFrame =
+    narrow(base(mpVotes, voidVotes, mpInfo), top, sort, partyFilter)
 
+  /** Every MP's counts joined with mp_info, unfiltered and unordered: all
+    * the work that does not depend on a request's parameters.
+    */
+  def base(mpVotes: DataFrame, voidVotes: DataFrame, mpInfo: DataFrame): DataFrame = {
     val valid = mpVotes.join(voidVotes, Seq("id_hlasovani"), "left_anti")
 
     def cnt(cond: Column): Column = sum(when(cond, 1).otherwise(0)).cast("long")
@@ -48,11 +53,18 @@ object Attendance {
         col("active").cast("double") /
           (col("total") - col("excused")).cast("double") * 100.0)
 
-    val joined = perMp.join(broadcast(mpInfo), Seq("id_poslanec"), "left")
+    perMp.join(broadcast(mpInfo), Seq("id_poslanec"), "left")
+  }
 
+  /** A request's answer from [[base]]: party filter (case-insensitive),
+    * the `sort` key's order (ties by id_poslanec; an unknown key sorts as
+    * "worst"), `top` rows.
+    */
+  def narrow(base: DataFrame, top: Int, sort: String,
+      partyFilter: Option[String]): DataFrame = {
     val filtered = partyFilter match {
-      case Some(p) => joined.filter(upper(col("party")) === p.toUpperCase)
-      case None => joined
+      case Some(p) => base.filter(upper(col("party")) === p.toUpperCase)
+      case None => base
     }
 
     val (sortCol, desc) = sortConfig.getOrElse(sort, ("attendance_pct", false))

@@ -23,8 +23,14 @@ object Loyalty {
       voidVotes: DataFrame,
       mpInfo: DataFrame,
       top: Int = 30,
-      partyFilter: Option[String] = None): DataFrame = {
+      partyFilter: Option[String] = None): DataFrame =
+    narrow(base(votes, mpVotes, voidVotes, mpInfo), top, partyFilter)
 
+  /** Every MP's joined row, unfiltered and unordered: all the work that
+    * does not depend on a request's parameters.
+    */
+  def base(votes: DataFrame, mpVotes: DataFrame, voidVotes: DataFrame,
+      mpInfo: DataFrame): DataFrame = {
     // void exclusion (P4): left_anti scales to any void-list size
     val valid = mpVotes.join(voidVotes, Seq("id_hlasovani"), "left_anti")
 
@@ -55,15 +61,20 @@ object Loyalty {
       .withColumnRenamed("rebellion_cnt", "rebellions")
       .withColumnRenamed("total_votes", "active_votes")
 
-    val joined = perMp
+    perMp
       .join(broadcast(mpInfo), Seq("id_poslanec"), "left")
       .join(rebellionLists, Seq("id_poslanec"), "left")
       .withColumn("rebellion_votes",
         coalesce(col("rebellion_votes"), array()))
+  }
 
+  /** A request's answer from [[base]]: party filter (case-insensitive),
+    * worst rebel first (ties by id_poslanec), `top` rows.
+    */
+  def narrow(base: DataFrame, top: Int, partyFilter: Option[String]): DataFrame = {
     val filtered = partyFilter match {
-      case Some(p) => joined.filter(upper(col("party")) === p.toUpperCase)
-      case None => joined
+      case Some(p) => base.filter(upper(col("party")) === p.toUpperCase)
+      case None => base
     }
 
     filtered

@@ -29,15 +29,11 @@ case class PeriodData(
   *   <root>/tisky/tisky.unl
   * }}}
   *
-  * Each of the five period tables is materialized once, here, with an
-  * eager `localCheckpoint` (MEMORY_AND_DISK: blocks spill to disk under
-  * memory pressure instead of being lost). Its lineage is cut, so a
+  * Each of the five period tables is made [[Resident]] once, here, so a
   * request scans resident blocks instead of re-parsing the windows-1250
   * dump and rebuilding `mpInfo`/`tiskLookup`; load and refresh pay that
   * cost once. A refresh swaps in a new, already materialized
-  * `PeriodData`. The old one is never unpersisted explicitly — a request
-  * still running on it would lose its blocks — the ContextCleaner frees
-  * them once nothing references it.
+  * `PeriodData`; the old one is left to the ContextCleaner.
   */
 object PeriodLoader {
 
@@ -55,11 +51,11 @@ object PeriodLoader {
     val mps = read("poslanci", "poslanec.unl", PspSchemas.poslanec)
     val organs = read("poslanci", "organy.unl", PspSchemas.organy)
     val member = read("poslanci", "zarazeni.unl", PspSchemas.zarazeni)
-    val votes = resident(read(s"hl-$period", "hl*s.unl", PspSchemas.hlHlasovani))
-    val mpVotes = resident(read(s"hl-$period", "hl*h*.unl", PspSchemas.hlPoslanec))
+    val votes = Resident(read(s"hl-$period", "hl*s.unl", PspSchemas.hlHlasovani))
+    val mpVotes = Resident(read(s"hl-$period", "hl*h*.unl", PspSchemas.hlPoslanec))
     // new periods may not have a void file yet - the reference substitutes
     // an empty frame (data_reader.py:314-327)
-    val voids = resident(
+    val voids = Resident(
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$root/hl-$period/zmatecne.unl")))
         read(s"hl-$period", "zmatecne.unl", PspSchemas.zmatecne)
@@ -69,33 +65,43 @@ object PeriodLoader {
     val bods = read("schuze", "bod_schuze.unl", PspSchemas.bodSchuze)
     val tisky = read("tisky", "tisky.unl", PspSchemas.tisky)
 
-    val mpInfo = resident(MpBuilder.buildMpInfo(period, mps, persons, organs, member))
-    val lookup = resident(TiskLookup.build(period, votes, sessions, bods, tisky))
+    val mpInfo = Resident(MpBuilder.buildMpInfo(period, mps, persons, organs, member))
+    val lookup = Resident(TiskLookup.build(period, votes, sessions, bods, tisky))
     PeriodData(period, votes, mpVotes, voids, mpInfo, lookup)
   }
-
-  private def resident(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 }
 
 /** The reference's serving API surface (routes → services) as one
   * facade over a loaded period — a user of the reference can call the
   * same catalog here and get DataFrames back.
+  *
+  * Loyalty, attendance and cross-party similarity keep their
+  * request-independent work — each analysis's `base` — [[Resident]]
+  * from its first use for the life of this Analyzer, like the
+  * reference's in-memory frames; a call only narrows the base to its
+  * party, order and `top`. A refresh builds a new Analyzer, so a base
+  * never outlives the data it was built from.
   */
 class Analyzer(val data: PeriodData) {
+  private val loyaltyBase = new Resident.OnFirstUse(
+    Loyalty.base(data.votes, data.mpVotes, data.voidVotes, data.mpInfo))
+  private val attendanceBase = new Resident.OnFirstUse(
+    Attendance.base(data.mpVotes, data.voidVotes, data.mpInfo))
+  private val similarityBase = new Resident.OnFirstUse(
+    Similarity.base(data.mpVotes, data.voidVotes, data.mpInfo))
+
   def loyalty(top: Int = 30, party: Option[String] = None): DataFrame =
-    Loyalty.computeLoyalty(data.votes, data.mpVotes, data.voidVotes,
-      data.mpInfo, top, party)
+    Loyalty.narrow(loyaltyBase(), top, party)
 
   def attendance(top: Int = 30, sort: String = "worst",
       party: Option[String] = None): DataFrame =
-    Attendance.computeAttendance(data.mpVotes, data.voidVotes, data.mpInfo,
-      top, sort, party)
+    Attendance.narrow(attendanceBase(), top, sort, party)
 
   def pcaCoords(): DataFrame =
     Similarity.computePcaCoords(data.mpVotes, data.voidVotes, data.mpInfo)
 
   def crossPartySimilarity(top: Int = 20): DataFrame =
-    Similarity.crossPartySimilarity(data.mpVotes, data.voidVotes, data.mpInfo, top)
+    Similarity.narrow(similarityBase(), top)
 
   def listVotes(search: Option[String] = None, outcome: Option[String] = None,
       topicKeys: Option[DataFrame] = None, page: Int = 1,
@@ -126,4 +132,12 @@ class Analyzer(val data: PeriodData) {
     val mpCount = data.mpInfo.agg(count(lit(1)).as("n_mps"))
     voteStats.crossJoin(mpStats).crossJoin(mpCount)
   }
+}
+
+object Analyzer {
+
+  /** The widest `top` any analysis serves: the routes' envelope and the
+    * number of pairs the cross-party similarity base keeps.
+    */
+  val MaxTop = 200
 }

@@ -13,7 +13,7 @@ import graft.operators.VectorOps
   * Scale design: the PCA path materializes per-MP feature arrays (fine —
   * rows ≪ items after aggregation); the cross-party similarity path NEVER
   * pivots — it is the long-form self-join + sum aggregation
-  * (VectorOps.cosinePairsTopK), which survives arbitrary member/item
+  * (VectorOps.cosinePairs), which survives arbitrary member/item
   * cardinality.
   */
 object Similarity {
@@ -66,7 +66,14 @@ object Similarity {
     */
   def crossPartySimilarity(
       mpVotes: DataFrame, voidVotes: DataFrame, mpInfo: DataFrame,
-      top: Int = 20): DataFrame = {
+      top: Int = 20): DataFrame =
+    narrow(base(mpVotes, voidVotes, mpInfo), top)
+
+  /** The widest answer any request can ask for: the top
+    * [[Analyzer.MaxTop]] cross-party pairs by (cosine desc, m_a, m_b),
+    * names attached. An MP without a party pairs with no one.
+    */
+  def base(mpVotes: DataFrame, voidVotes: DataFrame, mpInfo: DataFrame): DataFrame = {
     val enc = encodedVotes(mpVotes, voidVotes)
       .select(col("id_poslanec"), col("id_hlasovani"), col("v"))
       // zero entries contribute nothing to dots or norms - drop them to
@@ -77,14 +84,28 @@ object Similarity {
       col("id_poslanec"),
       concat_ws(" ", col("jmeno"), col("prijmeni")).as("mp_name"),
       col("party"))
-    val pairs = VectorOps.cosinePairsTopKFiltered(
-      enc, "id_poslanec", "id_hlasovani", "v",
-      attrs = names, attrCol = "party", requireDifferentAttr = true, k = top)
-    pairs
+    VectorOps.cosinePairs(enc, "id_poslanec", "id_hlasovani", "v")
       .join(broadcast(names.select(col("id_poslanec").as("m_a"),
         col("mp_name").as("mp1_name"), col("party").as("mp1_party"))), Seq("m_a"))
       .join(broadcast(names.select(col("id_poslanec").as("m_b"),
         col("mp_name").as("mp2_name"), col("party").as("mp2_party"))), Seq("m_b"))
+      // the reference's cross-party filter (similarity_service.py:96); a
+      // null party compares as null, so its pairs drop out too
+      .filter(col("mp1_party") =!= col("mp2_party"))
+      .orderBy(col("cosine").desc, col("m_a").asc, col("m_b").asc)
+      .limit(Analyzer.MaxTop)
+      .select("m_a", "m_b", "mp1_name", "mp1_party", "mp2_name", "mp2_party", "cosine")
+  }
+
+  /** A request's answer from [[base]]: its first `top` pairs, in order.
+    * `top` past [[Analyzer.MaxTop]] is refused: the base holds no more.
+    */
+  def narrow(base: DataFrame, top: Int): DataFrame = {
+    require(1 <= top && top <= Analyzer.MaxTop,
+      s"top must be in [1, ${Analyzer.MaxTop}], was $top")
+    base
+      .orderBy(col("cosine").desc, col("m_a").asc, col("m_b").asc)
+      .limit(top)
       .select("mp1_name", "mp1_party", "mp2_name", "mp2_party", "cosine")
   }
 }

@@ -40,8 +40,9 @@ case class PeriodCatalog(
   *
   * Kept from the reference, behavior-for-behavior:
   *  - period validation: unknown period → 404 (`routes/utils.py:10-13`)
-  *  - param envelopes: top ∈ [1,200], page ∈ [1,1000], bounded string
-  *    lengths → 422 outside them (FastAPI Query(ge/le/max_length) parity)
+  *  - param envelopes: top ∈ [1, Analyzer.MaxTop = 200], page ∈ [1,1000],
+  *    bounded string lengths → 422 outside them (FastAPI
+  *    Query(ge/le/max_length) parity)
   *  - result memoization through [[AnalysisCache]] with the reference's
   *    key scheme `loyalty:{period}:{top}:{party}` (`routes/voting.py:34`)
   *  - per-route rate limits (60/120/30/15 per minute, `@limiter.limit`)
@@ -236,10 +237,10 @@ class GraftServer(
   }
 
   /** Serialize a result for the response body. Every route clamps its own
-    * result size (top ∈ [1,200], paged listings), but `collect()` on the
-    * driver must not depend on each future route remembering to — the
-    * structural limit turns a forgotten clamp into a truncated payload
-    * instead of a driver OOM.
+    * result size (top ∈ [1, Analyzer.MaxTop], paged listings), but
+    * `collect()` on the driver must not depend on each future route
+    * remembering to — the structural limit turns a forgotten clamp into
+    * a truncated payload instead of a driver OOM.
     */
   private[serving] def rows(df: DataFrame): String =
     df.limit(GraftServer.MaxResponseRows).toJSON.collect()
@@ -315,7 +316,7 @@ class GraftServer(
 
   private def loyaltyRoute(q: Map[String, String]): String = {
     val (period, cat) = periodCatalog(q)
-    val top = intParam(q, "top", 30, 1, 200)
+    val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val party = strParam(q, "party", 200)
     cache.getOrCompute(GraftServer.key("loyalty", period, top, party)) {
       withTimeout(15000, "loyalty analysis") {
@@ -326,7 +327,7 @@ class GraftServer(
 
   private def attendanceRoute(q: Map[String, String]): String = {
     val (period, cat) = periodCatalog(q)
-    val top = intParam(q, "top", 30, 1, 200)
+    val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
     cache.getOrCompute(GraftServer.key("attendance", period, top, sort, party)) {
@@ -338,7 +339,7 @@ class GraftServer(
 
   private def similarityRoute(q: Map[String, String]): String = {
     val (period, cat) = periodCatalog(q)
-    val top = intParam(q, "top", 20, 1, 200)
+    val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
     cache.getOrCompute(GraftServer.key("similarity", period, top)) {
       withTimeout(30000, "similarity analysis") {
         rows(cat.analyzer.crossPartySimilarity(top))
@@ -632,7 +633,7 @@ class GraftServer(
         "topic" -> 200, "outcome" -> 10)
         .foreach { case (n, cap) => strParam(q, n, cap) }
       if (q.contains("page")) intParam(q, "page", 1, 1, 1000)
-      if (q.contains("top")) intParam(q, "top", 30, 1, 200)
+      if (q.contains("top")) intParam(q, "top", 30, 1, Analyzer.MaxTop)
       // Each route's key holds ONLY the params that route consumes, and
       // each is NORMALIZED through the same intParam/strParam reads the
       // route body performs — so `page=01` and `page=1` (or an ignored
@@ -652,9 +653,9 @@ class GraftServer(
           Seq(intParam(q, "page", 1, 1, 1000).toString,
             strParam(q, "search", 200))
         case "fragments/loyalty" | "fragments/attendance" =>
-          Seq(intParam(q, "top", 30, 1, 200).toString)
+          Seq(intParam(q, "top", 30, 1, Analyzer.MaxTop).toString)
         case "fragments/similarity" =>
-          Seq(intParam(q, "top", 20, 1, 200).toString)
+          Seq(intParam(q, "top", 20, 1, Analyzer.MaxTop).toString)
         // index, vote-detail (id is in the route), and the fixed-top
         // chart pages take no query params
         case _ => Nil
@@ -758,13 +759,13 @@ class GraftServer(
             Map("period" -> period.toString, "search" -> search))
         case "fragments/loyalty" =>
           PageRender.table(cat.analyzer.loyalty(
-            intParam(q, "top", 30, 1, 200)), lang)
+            intParam(q, "top", 30, 1, Analyzer.MaxTop)), lang)
         case "fragments/attendance" =>
           PageRender.table(cat.analyzer.attendance(
-            intParam(q, "top", 30, 1, 200)), lang)
+            intParam(q, "top", 30, 1, Analyzer.MaxTop)), lang)
         case "fragments/similarity" =>
           PageRender.table(cat.analyzer.crossPartySimilarity(
-            intParam(q, "top", 20, 1, 200)), lang)
+            intParam(q, "top", 20, 1, Analyzer.MaxTop)), lang)
 
         case other => throw HttpError(404, s"No page /$other")
       } }
@@ -852,7 +853,7 @@ class GraftServer(
     route match {
       case "loyalty.png" =>
         val (period, cat) = periodCatalog(q)
-        val top = intParam(q, "top", 20, 1, 200)
+        val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
         pngCache.getOrCompute(GraftServer.key("png_loyalty", period, top)) {
           withTimeout(20000, "loyalty chart") {
             val rows = cat.analyzer.loyalty(top)
@@ -863,7 +864,7 @@ class GraftServer(
         }
       case "attendance.png" =>
         val (period, cat) = periodCatalog(q)
-        val top = intParam(q, "top", 20, 1, 200)
+        val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
         val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
         val party = strParam(q, "party", 200)
         val field = AttendanceChartField.getOrElse(sort, "attendance_pct")
@@ -899,7 +900,7 @@ class GraftServer(
 
   private def chartLoyaltyRoute(q: Map[String, String]): String = {
     val (period, cat) = periodCatalog(q)
-    val top = intParam(q, "top", 20, 1, 200)
+    val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
     cache.getOrCompute(GraftServer.key("chart_loyalty", period, top)) {
       withTimeout(20000, "loyalty chart") {
         rows(cat.analyzer.loyalty(top)
@@ -918,7 +919,7 @@ class GraftServer(
 
   private def chartAttendanceRoute(q: Map[String, String]): String = {
     val (period, cat) = periodCatalog(q)
-    val top = intParam(q, "top", 20, 1, 200)
+    val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
     val field = AttendanceChartField.getOrElse(sort, "attendance_pct")

@@ -413,9 +413,16 @@ class GraftServerSpec extends SparkSpec {
       // Dvořák votes against his club on one of two votes
       assert(before.body().contains("Dvořák"))
       assert(before.body().contains("\"rebellion_pct\":50.0"))
-      Seq("/api/attendance?period=10", "/api/votes?period=10&search=prvni",
-        "/api/votes/1?period=10", "/api/stats?period=10")
+      Seq("/api/votes?period=10&search=prvni", "/api/votes/1?period=10",
+        "/api/stats?period=10")
         .foreach(path => assert(get(path, at).statusCode() == 200, path))
+      // both read MP 3's vote 1, which the new file flips
+      val changing = Seq("/api/attendance?period=10", "/api/similarity?period=10")
+      val bodies = changing.map { path =>
+        val r = get(path, at)
+        assert(r.statusCode() == 200, path)
+        r.body()
+      }
       Fixtures.writeUnl(dir, "hl-10", "hl10h1.unl",
         Fixtures.UnlMpVotes.map { case "3|1|B" => "3|1|A"; case l => l })
       assert(srv.refreshPeriod(10, catalog()) >= 1)
@@ -423,6 +430,11 @@ class GraftServerSpec extends SparkSpec {
       assert(after.statusCode() == 200)
       assert(after.body().contains("Dvořák"))
       assert(!after.body().contains("\"rebellion_pct\":50.0"), after.body())
+      changing.zip(bodies).foreach { case (path, before) =>
+        val r = get(path, at)
+        assert(r.statusCode() == 200, path)
+        assert(r.body() != before, path)
+      }
     } finally srv.stop()
   }
 
@@ -460,6 +472,42 @@ class GraftServerSpec extends SparkSpec {
     } finally {
       srv.stop()
       aqeBefore.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
+  }
+
+  test("a base build cancelled by a 504 is not kept: the next call " +
+      "builds it again and answers 200") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // MP-vote rows stall while the flag is set, so the first loyalty
+    // call's base build outlasts its budget
+    val stall = udf { (v: String) =>
+      while (GraftServerSpec.Stall.get) Thread.sleep(10)
+      v
+    }.asNondeterministic()
+    val cat = fixtureCatalog()
+    val d = cat.analyzer.data
+    val stalling = cat.copy(analyzer = new Analyzer(d.copy(
+      mpVotes = d.mpVotes.repartition(4).withColumn("vysledek", stall(col("vysledek"))))))
+    val srv = new GraftServer(Map(1 -> stalling),
+      timeoutMillis = budget => if (GraftServerSpec.Stall.get) 1000 else budget).start()
+    GraftServerSpec.Stall.set(true)
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      assert(get("/api/loyalty?period=1&top=3", at).statusCode() == 504)
+      // released only once the cancelled build has failed: a release
+      // before the cancel lands would let that build finish
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(tracker.getActiveJobIds.isEmpty)
+      GraftServerSpec.Stall.set(false)
+      val r = get("/api/loyalty?period=1&top=3", at)
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body() == srv.rows(new Analyzer(d).loyalty(3)))
+    } finally {
+      GraftServerSpec.Stall.set(false)
+      srv.stop()
     }
   }
 
@@ -674,4 +722,9 @@ class GraftServerSpec extends SparkSpec {
       assert(r.body().contains("not enabled"))
     } finally off.stop()
   }
+}
+
+object GraftServerSpec {
+  /** Holds the stalling UDF of the 504 rebuild spec while set. */
+  val Stall = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
