@@ -29,7 +29,9 @@ object Browse {
   /** Reference-parity paged result (votes_service.py:171-177): count the
     * filtered relation, clamp the requested page into [1, total_pages],
     * then slice. Two jobs (count + slice) — the reference pays the same
-    * two passes; cache `df` upstream when serving many pages.
+    * two passes; keep `df`'s expensive part resident upstream when serving
+    * many pages, as an `Analyzer`'s vote-listing base
+    * (`VotesBrowser.listBase`) does.
     */
   case class PagedResult(
       rows: DataFrame, total: Long, page: Int, perPage: Int, totalPages: Int)

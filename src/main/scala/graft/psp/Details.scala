@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * `services/amendment_service.py:168-246`). Each is a bounded
   * single-key lookup: a pushed-down equality filter on the fact table
   * plus broadcast joins against the small dimensions, so a detail page
-  * costs one partition-pruned scan regardless of corpus size.
+  * costs one partition-pruned scan regardless of corpus size. A vote's
+  * detail is also served whole from a resident [[voteDetailBase]]
+  * narrowed by [[voteDetailNarrow]]: one filter, no per-request join.
   */
 object Details {
 
@@ -78,6 +80,118 @@ object Details {
       when(col(en).isNotNull && col(en) =!= "", col(en)).otherwise(col(cs))
     else col(cs)
 
+  /** Per-party count fields of `party_breakdown`, in the reference's
+    * names (`amendment_service.py:299-314`), with the vote code each
+    * counts; `total` counts every MP row of the party.
+    */
+  val BreakdownCounts: Seq[(String, String)] = Seq(
+    "yes" -> VoteResult.Yes, "no" -> VoteResult.No,
+    "abstained" -> VoteResult.Abstained, "passive" -> VoteResult.DidNotVote,
+    "absent" -> VoteResult.Absent, "excused" -> VoteResult.Excused)
+
+  /** Every vote's info columns: null-filled names and the linked print
+    * name, kept only when `bod > 0` (the reference's guard).
+    */
+  private def infoBase(votes: DataFrame, tiskLookup: DataFrame): DataFrame =
+    votes
+      .withColumn("nazev_dlouhy", coalesce(col("nazev_dlouhy"), lit("")))
+      .withColumn("nazev_kratky", coalesce(col("nazev_kratky"), lit("")))
+      .join(broadcast(tiskLookup.select(col("schuze"), col("bod"),
+        col("nazev").as("tisk_nazev"))), Seq("schuze", "bod"), "left")
+      .withColumn("tisk_nazev", when(col("bod") > 0, col("tisk_nazev")))
+
+  /** One row per vote that has MP rows (MPs of `mpInfo` only):
+    * `mp_votes`, every (party, prijmeni, jmeno, vysledek) sorted by that
+    * whole key, and `party_breakdown`, its per-party counts sorted by
+    * party. One shuffle: the breakdown is counted off the sorted array.
+    */
+  private[psp] def mpArrays(mpVotes: DataFrame, mpInfo: DataFrame): DataFrame = {
+    val perVote = mpVotes
+      .join(broadcast(mpInfo.select("id_poslanec", "party", "prijmeni", "jmeno")),
+        Seq("id_poslanec"), "inner")
+      .groupBy("id_hlasovani")
+      .agg(sort_array(collect_list(struct(col("party"), col("prijmeni"),
+        col("jmeno"), col("vysledek")))).as("mp_votes"))
+    // a sorted array's distinct parties come out sorted (a null party first)
+    val breakdown = transform(
+      array_distinct(transform(col("mp_votes"), _.getField("party"))), { p =>
+        val ofParty = filter(col("mp_votes"), _.getField("party") <=> p)
+        val counts = BreakdownCounts.map { case (name, code) =>
+          size(filter(ofParty, _.getField("vysledek") === code)).cast("long").as(name)
+        }
+        struct(p.as("party") +: counts :+ size(ofParty).cast("long").as("total"): _*)
+      })
+    perVote.select(col("id_hlasovani"), breakdown.as("party_breakdown"), col("mp_votes"))
+  }
+
+  /** The request-independent part of every vote's detail, one row per
+    * vote: [[infoBase]]'s columns, `party_breakdown` and `mp_votes`
+    * ([[mpArrays]]; empty for a vote without MP rows). No labels: those
+    * depend on the request's language.
+    */
+  def voteDetailBase(votes: DataFrame, mpVotes: DataFrame, mpInfo: DataFrame,
+      tiskLookup: DataFrame): DataFrame = {
+    val info = infoBase(votes, tiskLookup)
+    val arrays = mpArrays(mpVotes, mpInfo)
+    def orEmpty(c: String) =
+      coalesce(col(c), array().cast(arrays.schema(c).dataType)).as(c)
+    info.join(arrays, Seq("id_hlasovani"), "left")
+      .select(info.columns.map(col) :+ orEmpty("party_breakdown") :+ orEmpty("mp_votes"): _*)
+  }
+
+  /** One vote's info columns, in [[voteInfo]]'s order, from that vote's
+    * rows of a base that starts with [[infoBase]]'s: the localized outcome
+    * label and the print's topics (only when `bod > 0`) added; any further
+    * base columns carried after them.
+    */
+  private def infoNarrow(one: DataFrame, topics: Option[DataFrame],
+      lang: String): DataFrame = {
+    val withTopics = topics match {
+      case Some(t) =>
+        val perKey = t
+          .groupBy("schuze", "bod")
+          .agg(sort_array(collect_set(langCol(t, "topic", "topic_en", lang)))
+            .as("tisk_topics"))
+        one.join(broadcast(perKey), Seq("schuze", "bod"), "left")
+      case None => one.withColumn("tisk_topics", lit(null).cast("array<string>"))
+    }
+    val carried = Set("tisk_nazev", "tisk_topics", "party_breakdown", "mp_votes")
+    withTopics.select(withTopics.columns.filterNot(carried).map(col) ++ Seq(
+        outcomeLabel(col("vysledek"), lang).as("outcome_label"),
+        col("tisk_nazev"),
+        when(col("bod") > 0, coalesce(col("tisk_topics"), array()))
+          .otherwise(array()).as("tisk_topics")) ++
+      one.columns.filter(Set("party_breakdown", "mp_votes")).map(col): _*)
+  }
+
+  /** Rows of `base` for one vote. The id is compared as text: a long
+    * literal is inlined into the generated code, so every id would
+    * compile new classes, while a string literal is passed by reference
+    * and every id reuses one compiled plan. For resident bases only: the
+    * cast defeats a file scan's filter pushdown.
+    */
+  private[psp] def ofVote(base: DataFrame, voteId: Long): DataFrame =
+    base.filter(col("id_hlasovani").cast("string") === voteId.toString)
+
+  /** One vote's detail from [[voteDetailBase]] as a single row of `info`
+    * (a struct of [[voteInfo]]'s columns), `party_breakdown` and
+    * `mp_votes` (each MP's `vote_label` added); 0 rows = unknown vote.
+    * A filter and a projection over the base: no join, no aggregation
+    * unless `topics` is given.
+    */
+  def voteDetailNarrow(base: DataFrame, topics: Option[DataFrame],
+      voteId: Long, lang: String): DataFrame = {
+    val one = infoNarrow(ofVote(base, voteId), topics, lang)
+    val info = one.columns.filterNot(Set("party_breakdown", "mp_votes"))
+    one.select(
+      struct(info.map(col): _*).as("info"),
+      col("party_breakdown"),
+      transform(col("mp_votes"), m => struct(m.getField("party").as("party"),
+        m.getField("prijmeni").as("prijmeni"), m.getField("jmeno").as("jmeno"),
+        m.getField("vysledek").as("vysledek"),
+        mpVoteLabel(m.getField("vysledek")).as("vote_label"))).as("mp_votes"))
+  }
+
   /** Vote metadata for one `id_hlasovani` (`_build_vote_info`,
     * `votes_service.py:207-262` minus the scrape-side history matching):
     * null-filled names, localized outcome label, linked print name and
@@ -89,34 +203,13 @@ object Details {
       tiskLookup: DataFrame,
       topics: Option[DataFrame],
       voteId: Long,
-      lang: String = "cs"): DataFrame = {
-    val base = votes
-      .filter(col("id_hlasovani") === voteId)
-      .withColumn("nazev_dlouhy", coalesce(col("nazev_dlouhy"), lit("")))
-      .withColumn("nazev_kratky", coalesce(col("nazev_kratky"), lit("")))
-      .withColumn("outcome_label", outcomeLabel(col("vysledek"), lang))
-    val withTisk = base
-      .join(broadcast(tiskLookup.select(col("schuze"), col("bod"),
-        col("nazev").as("tisk_nazev"))), Seq("schuze", "bod"), "left")
-      .withColumn("tisk_nazev",
-        when(col("bod") > 0, col("tisk_nazev")))
-    val withTopics = topics match {
-      case Some(t) =>
-        val perKey = t
-          .groupBy("schuze", "bod")
-          .agg(sort_array(collect_set(langCol(t, "topic", "topic_en", lang)))
-            .as("tisk_topics"))
-        withTisk.join(broadcast(perKey), Seq("schuze", "bod"), "left")
-      case None => withTisk.withColumn("tisk_topics", lit(null).cast("array<string>"))
-    }
-    withTopics.withColumn("tisk_topics",
-      when(col("bod") > 0, coalesce(col("tisk_topics"), array()))
-        .otherwise(array()))
-  }
+      lang: String = "cs"): DataFrame =
+    infoNarrow(infoBase(votes.filter(col("id_hlasovani") === voteId), tiskLookup),
+      topics, lang)
 
   /** Per-MP listing for the vote-detail page (`_build_mp_breakdown`,
     * `votes_service.py:283-300`): names + party + label, sorted
-    * (party, prijmeni, jmeno).
+    * (party, prijmeni, jmeno, vysledek).
     */
   def voteMpList(mpVotes: DataFrame, mpInfo: DataFrame,
       voteId: Long): DataFrame =

@@ -1,7 +1,9 @@
 package graft.psp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
+import graft.operators.Browse
 import graft.sources.{ParquetCache, PspSchemas, UnlReader}
 
 /** One electoral period's tables — the reference's `PeriodData`
@@ -75,11 +77,12 @@ object PeriodLoader {
   * facade over a loaded period — a user of the reference can call the
   * same catalog here and get DataFrames back.
   *
-  * Loyalty, attendance and cross-party similarity keep their
-  * request-independent work — each analysis's `base` — [[Resident]]
-  * from its first use for the life of this Analyzer, like the
-  * reference's in-memory frames; a call only narrows the base to its
-  * party, order and `top`. A refresh builds a new Analyzer, so a base
+  * Each analysis keeps its request-independent work — its `base` —
+  * [[Resident]] from its first use for the life of this Analyzer, like
+  * the reference's in-memory frames: loyalty, attendance and cross-party
+  * similarity narrow theirs to a party, order and `top`; the vote listing
+  * and vote detail filter theirs; the PCA coordinates take no parameters
+  * and are the base itself. A refresh builds a new Analyzer, so a base
   * never outlives the data it was built from.
   */
 class Analyzer(val data: PeriodData) {
@@ -89,6 +92,12 @@ class Analyzer(val data: PeriodData) {
     Attendance.base(data.mpVotes, data.voidVotes, data.mpInfo))
   private val similarityBase = new Resident.OnFirstUse(
     Similarity.base(data.mpVotes, data.voidVotes, data.mpInfo))
+  private val pca = new Resident.OnFirstUse(
+    Similarity.computePcaCoords(data.mpVotes, data.voidVotes, data.mpInfo))
+  private val votesListBase = new Resident.OnFirstUse(
+    VotesBrowser.listBase(data.votes, data.voidVotes))
+  private val voteDetailBase = new Resident.OnFirstUse(
+    Details.voteDetailBase(data.votes, data.mpVotes, data.mpInfo, data.tiskLookup))
 
   def loyalty(top: Int = 30, party: Option[String] = None): DataFrame =
     Loyalty.narrow(loyaltyBase(), top, party)
@@ -97,23 +106,38 @@ class Analyzer(val data: PeriodData) {
       party: Option[String] = None): DataFrame =
     Attendance.narrow(attendanceBase(), top, sort, party)
 
-  def pcaCoords(): DataFrame =
-    Similarity.computePcaCoords(data.mpVotes, data.voidVotes, data.mpInfo)
+  def pcaCoords(): DataFrame = pca()
 
   def crossPartySimilarity(top: Int = 20): DataFrame =
     Similarity.narrow(similarityBase(), top)
 
+  def listVotesPaged(search: Option[String] = None, outcome: Option[String] = None,
+      topicKeys: Option[DataFrame] = None, page: Int = 1,
+      perPage: Int = 30): Browse.PagedResult =
+    VotesBrowser.listNarrow(votesListBase(), search, outcome, topicKeys, page, perPage)
+
   def listVotes(search: Option[String] = None, outcome: Option[String] = None,
       topicKeys: Option[DataFrame] = None, page: Int = 1,
       perPage: Int = 30): DataFrame =
-    VotesBrowser.listVotes(data.votes.sparkSession, data.votes, data.voidVotes,
-      search, outcome, topicKeys, page, perPage)
+    listVotesPaged(search, outcome, topicKeys, page, perPage).rows
 
+  /** One vote's whole detail as one row (`info`, `party_breakdown`,
+    * `mp_votes`; see [[Details.voteDetailNarrow]]); 0 rows = unknown vote.
+    */
+  def voteDetailRow(voteId: Long, lang: String = "cs",
+      topics: Option[DataFrame] = None): DataFrame =
+    Details.voteDetailNarrow(voteDetailBase(), topics, voteId, lang)
+
+  /** One vote's per-party counts in the reference's field names
+    * (party, yes, no, abstained, passive, absent, excused, total), sorted
+    * by party.
+    */
   def voteDetail(voteId: Long): DataFrame =
-    VotesBrowser.partyBreakdown(data.mpVotes, data.mpInfo, voteId)
+    Details.ofVote(voteDetailBase(), voteId).select(inline(col("party_breakdown")))
 
+  /** One vote's (party, prijmeni, jmeno, vysledek) rows, in that order. */
   def voteMpVotes(voteId: Long): DataFrame =
-    VotesBrowser.voteMpVotes(data.mpVotes, data.mpInfo, voteId)
+    Details.ofVote(voteDetailBase(), voteId).select(inline(col("mp_votes")))
 
   def coalitions(amendVoteIds: DataFrame, topRebels: Int = 20)
       : (DataFrame, DataFrame, DataFrame) =
@@ -121,7 +145,6 @@ class Analyzer(val data: PeriodData) {
 
   /** Period stats (reference `tisk_models.py:119-141`). */
   def periodStats(): DataFrame = {
-    import org.apache.spark.sql.functions._
     // real psp.cz dates are "18.12.2021"; try_to_date = the reference's
     // strict=False (bad rows -> null, never an ANSI throw)
     val voteStats = data.votes.agg(

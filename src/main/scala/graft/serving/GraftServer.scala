@@ -55,7 +55,7 @@ case class PeriodCatalog(
 class GraftServer(
     periods: Map[Int, PeriodCatalog],
     port: Int = 0,
-    val cache: AnalysisCache[String] = new AnalysisCache[String](),
+    val cache: AnalysisCache[Array[Byte]] = new AnalysisCache[Array[Byte]](),
     limiter: RateLimiter = new RateLimiter(),
     limits: Map[String, Int] = GraftServer.DefaultLimits,
     timeoutMillis: Long => Long = identity,
@@ -124,12 +124,14 @@ class GraftServer(
     case c => c.toString
   } + "\""
 
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
   private def send(ex: HttpExchange, status: Int, body: String,
-      contentType: String = "application/json; charset=utf-8"): Unit =
-    sendBytes(ex, status, body.getBytes(StandardCharsets.UTF_8), contentType)
+      contentType: String = GraftServer.JsonType): Unit =
+    sendBytes(ex, status, utf8(body), contentType)
 
   private def sendBytes(ex: HttpExchange, status: Int, bytes: Array[Byte],
-      contentType: String): Unit = {
+      contentType: String = GraftServer.JsonType): Unit = {
     val h = ex.getResponseHeaders
     h.set("Content-Type", contentType)
     // SecurityHeadersMiddleware parity (reference `middleware.py:19-38`)
@@ -241,10 +243,25 @@ class GraftServer(
     * `collect()` on the driver must not depend on each future route
     * remembering to — the structural limit turns a forgotten clamp into
     * a truncated payload instead of a driver OOM.
+    *
+    * Rows go through `to_json`, not `Dataset.toJSON`: the latter
+    * deserializes each row first, and the deserializer of a nested array
+    * (loyalty's rebellion list, a vote's MP list) is generated with fresh
+    * names on every call, so every request compiled new classes. Same
+    * JSON writer, same options, same text.
     */
   private[serving] def rows(df: DataFrame): String =
-    df.limit(GraftServer.MaxResponseRows).toJSON.collect()
+    df.limit(GraftServer.MaxResponseRows)
+      .select(to_json(struct(df.columns.map(c => col(s"`$c`")): _*)))
+      .collect().map(_.getString(0))
       .mkString("[", ",", "]")
+
+  /** `body` memoized under `key` as the UTF-8 bytes every response
+    * sends: half the memory of the JSON's UTF-16 string, whose Czech
+    * names rule out Java's one-byte form, and no re-encoding per hit.
+    */
+  private def memo(key: String)(body: => String): Array[Byte] =
+    cache.getOrCompute(key)(utf8(body))
 
   private def paged(r: graft.operators.Browse.PagedResult): String =
     s"""{"rows":${rows(r.rows)},"total":${r.total},"page":${r.page},""" +
@@ -281,7 +298,7 @@ class GraftServer(
       }
       val body = route match {
         case "health" =>
-          s"""{"status":"ok","periods_loaded":[${livePeriods.keys.toSeq.sorted.mkString(",")}]}"""
+          utf8(s"""{"status":"ok","periods_loaded":[${livePeriods.keys.toSeq.sorted.mkString(",")}]}""")
         case "loyalty" => loyaltyRoute(q)
         case "attendance" => attendanceRoute(q)
         case "similarity" => similarityRoute(q)
@@ -299,13 +316,13 @@ class GraftServer(
         case "stats" => statsRoute(q)
         case "topics" => topicsRoute(q)
         case "statuses" => statusesRoute(q)
-        case "tisk-text" => tiskTextRoute(q)
+        case "tisk-text" => utf8(tiskTextRoute(q))
         case "charts/loyalty" => chartLoyaltyRoute(q)
         case "charts/attendance" => chartAttendanceRoute(q)
         case "charts/similarity" => chartSimilarityRoute(q)
         case other => throw HttpError(404, s"No route /api/$other")
       }
-      send(ex, 200, body)
+      sendBytes(ex, 200, body)
     } catch {
       case HttpError(status, detail) =>
         send(ex, status, s"""{"detail":${jstr(detail)}}""")
@@ -314,76 +331,75 @@ class GraftServer(
     } finally ex.close()
   }
 
-  private def loyaltyRoute(q: Map[String, String]): String = {
+  private def loyaltyRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val party = strParam(q, "party", 200)
-    cache.getOrCompute(GraftServer.key("loyalty", period, top, party)) {
+    memo(GraftServer.key("loyalty", period, top, party)) {
       withTimeout(15000, "loyalty analysis") {
         rows(cat.analyzer.loyalty(top, Some(party).filter(_.nonEmpty)))
       }
     }
   }
 
-  private def attendanceRoute(q: Map[String, String]): String = {
+  private def attendanceRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
-    cache.getOrCompute(GraftServer.key("attendance", period, top, sort, party)) {
+    memo(GraftServer.key("attendance", period, top, sort, party)) {
       withTimeout(15000, "attendance analysis") {
         rows(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty)))
       }
     }
   }
 
-  private def similarityRoute(q: Map[String, String]): String = {
+  private def similarityRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-    cache.getOrCompute(GraftServer.key("similarity", period, top)) {
+    memo(GraftServer.key("similarity", period, top)) {
       withTimeout(30000, "similarity analysis") {
         rows(cat.analyzer.crossPartySimilarity(top))
       }
     }
   }
 
-  private def pcaRoute(q: Map[String, String]): String = {
+  private def pcaRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     // trailing ':' keeps period-prefix invalidation exact ("pca:1:" can
     // never prefix-match a period-10 key)
-    cache.getOrCompute(GraftServer.key("similarity_pca", period)) {
+    memo(GraftServer.key("similarity_pca", period)) {
       withTimeout(30000, "PCA analysis") {
         rows(cat.analyzer.pcaCoords())
       }
     }
   }
 
-  private def votesRoute(q: Map[String, String]): String = {
+  private def votesRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val search = strParam(q, "search", 200)
     val outcome = strParam(q, "outcome", 20)
     val topic = strParam(q, "topic", 200)
     val page = intParam(q, "page", 1, 1, 1000)
     val lang = langParam(q)
-    cache.getOrCompute(
+    memo(
         GraftServer.key("votes", period, search, outcome, topic, page, lang)) {
-      val topicKeys = Some(topic).filter(_.nonEmpty).flatMap { t =>
-        cat.voteTopics.map(_.filter(col("topic") === t).select("schuze", "bod"))
+      withTimeout(15000, "vote listing") {
+        val topicKeys = Some(topic).filter(_.nonEmpty).flatMap { t =>
+          cat.voteTopics.map(_.filter(col("topic") === t).select("schuze", "bod"))
+        }
+        val pr = cat.analyzer.listVotesPaged(Some(search).filter(_.nonEmpty),
+          Some(outcome).filter(_.nonEmpty), topicKeys, page)
+        // `_enrich_vote_rows` (votes_service.py:135-144): localized outcome
+        // label on each listed row — serving-layer projection only, so the
+        // browser query itself stays oracle-comparable
+        paged(pr.copy(rows = pr.rows.withColumn("outcome_label",
+          Details.outcomeLabel(col("vysledek"), lang))))
       }
-      val d = cat.analyzer.data
-      val pr = graft.psp.VotesBrowser.listVotesPaged(
-        d.votes.sparkSession, d.votes, d.voidVotes,
-        Some(search).filter(_.nonEmpty), Some(outcome).filter(_.nonEmpty),
-        topicKeys, page)
-      // `_enrich_vote_rows` (votes_service.py:135-144): localized outcome
-      // label on each listed row — serving-layer projection only, so the
-      // browser query itself stays oracle-comparable
-      paged(pr.copy(rows = pr.rows.withColumn("outcome_label",
-        Details.outcomeLabel(col("vysledek"), lang))))
     }
   }
 
-  private def lawsRoute(q: Map[String, String]): String = {
+  private def lawsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val laws = cat.laws.getOrElse(
       throw HttpError(404, s"Period $period has no laws table loaded"))
@@ -392,7 +408,7 @@ class GraftServer(
     val topic = strParam(q, "topic", 200)
     val page = intParam(q, "page", 1, 1, 1000)
     val lang = langParam(q)
-    cache.getOrCompute(
+    memo(
         GraftServer.key("laws", period, search, status, topic, page, lang)) {
       // English listings browse (and topic-filter) the English labels
       // when the TopicPipeline attached them (`law_service.py` topics_en)
@@ -412,23 +428,23 @@ class GraftServer(
     }
   }
 
-  private def amendmentsRoute(q: Map[String, String]): String = {
+  private def amendmentsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val bills = cat.amendmentBills.getOrElse(
       throw HttpError(404, s"Period $period has no amendment table loaded"))
     val search = strParam(q, "search", 200)
     val page = intParam(q, "page", 1, 1, 1000)
-    cache.getOrCompute(GraftServer.key("amendments", period, search, page)) {
+    memo(GraftServer.key("amendments", period, search, page)) {
       paged(Amendments.listBillsPaged(
         bills, cat.analyzer.data.tiskLookup, Some(search).filter(_.nonEmpty), page))
     }
   }
 
-  private def coalitionsRoute(q: Map[String, String]): String = {
+  private def coalitionsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val amendIds = cat.amendVoteIds.getOrElse(
       throw HttpError(404, s"Period $period has no amendment votes loaded"))
-    cache.getOrCompute(GraftServer.key("amendment-coalitions", period)) {
+    memo(GraftServer.key("amendment-coalitions", period)) {
       withTimeout(30000, "coalition analysis") {
         val d = cat.analyzer.data
         val (agreement, rebels, cohesion) =
@@ -441,11 +457,11 @@ class GraftServer(
     }
   }
 
-  private def statsRoute(q: Map[String, String]): String = {
+  private def statsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     // lang is accepted + keyed for parity with the reference's stats page
     // even though the numeric envelope is language-invariant
-    cache.getOrCompute(GraftServer.key("stats", period, langParam(q))) {
+    memo(GraftServer.key("stats", period, langParam(q))) {
       rows(cat.analyzer.periodStats())
     }
   }
@@ -455,10 +471,10 @@ class GraftServer(
     * get_all_topic_labels — union over the period's prints, lang-aware,
     * sorted).
     */
-  private def topicsRoute(q: Map[String, String]): String = {
+  private def topicsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val lang = langParam(q)
-    cache.getOrCompute(GraftServer.key("topics", period, lang)) {
+    memo(GraftServer.key("topics", period, lang)) {
       val fromLaws = cat.laws.toSeq.map { laws =>
         val l =
           if (lang == "en" && laws.columns.contains("topics_en"))
@@ -484,11 +500,11 @@ class GraftServer(
   /** GET /api/statuses: the distinct bill statuses the laws filter
     * offers (reference `law_service.py:48-60` get_all_status_labels).
     */
-  private def statusesRoute(q: Map[String, String]): String = {
+  private def statusesRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val laws = cat.laws.getOrElse(
       throw HttpError(404, s"Period $period has no laws table loaded"))
-    cache.getOrCompute(GraftServer.key("statuses", period)) {
+    memo(GraftServer.key("statuses", period)) {
       rows(laws.select(col("status")).distinct().orderBy("status"))
     }
   }
@@ -504,44 +520,28 @@ class GraftServer(
     if (json == "[]") None else Some(json.stripPrefix("[").stripSuffix("]"))
   }
 
-  /** Party breakdown in the reference's field names
-    * (`amendment_service.py:299-314`): yes/no/abstained/passive/absent/
-    * excused/total per party.
-    */
-  private def namedBreakdown(d: graft.psp.PeriodData, id: Long): DataFrame =
-    graft.psp.VotesBrowser.partyBreakdown(d.mpVotes, d.mpInfo, id)
-      .select(col("party"),
-        col("a_cnt").as("yes"), col("b_cnt").as("no"),
-        col("c_cnt").as("abstained"), col("f_cnt").as("passive"),
-        col("@_cnt").as("absent"), col("m_cnt").as("excused"),
-        col("total_cnt").as("total"))
-
   /** GET /api/votes/{id} (`votes_service.py:303-319` via pages.py:130):
-    * info + party_breakdown + mp_votes.
+    * info + party_breakdown + mp_votes, one row narrowed from the
+    * Analyzer's resident vote-detail base.
     */
-  private def voteDetailRoute(q: Map[String, String], id: Long): String = {
+  private def voteDetailRoute(q: Map[String, String], id: Long): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val lang = langParam(q)
-    cache.getOrCompute(GraftServer.key("vote_detail", period, id, lang)) {
+    memo(GraftServer.key("vote_detail", period, id, lang)) {
       withTimeout(15000, "vote detail") {
-        val d = cat.analyzer.data
-        val info = singleObject(Details.voteInfo(
-            d.votes, d.tiskLookup, cat.voteTopics, id, lang))
+        singleObject(cat.analyzer.voteDetailRow(id, lang, cat.voteTopics))
           .getOrElse(throw HttpError(404, s"Vote $id not found"))
-        s"""{"info":$info,""" +
-          s""""party_breakdown":${rows(namedBreakdown(d, id))},""" +
-          s""""mp_votes":${rows(Details.voteMpList(d.mpVotes, d.mpInfo, id))}}"""
       }
     }
   }
 
   /** GET /api/laws/{ct} (`law_service.py:247-312` via pages.py:174). */
-  private def lawDetailRoute(q: Map[String, String], ct: Int): String = {
+  private def lawDetailRoute(q: Map[String, String], ct: Int): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val laws = cat.laws.getOrElse(
       throw HttpError(404, s"Period $period has no laws table loaded"))
     val lang = langParam(q)
-    cache.getOrCompute(GraftServer.key("law_detail", period, ct, lang)) {
+    memo(GraftServer.key("law_detail", period, ct, lang)) {
       withTimeout(15000, "law detail") {
         singleObject(Details.lawDetail(laws, cat.amendmentBills, ct, lang))
           .getOrElse(throw HttpError(404, s"Law $ct not found"))
@@ -553,12 +553,12 @@ class GraftServer(
     * (`amendment_service.py:168-246`): the bill's nested amendment list.
     */
   private def amendmentDetailRoute(q: Map[String, String],
-      schuze: Int, bod: Int): String = {
+      schuze: Int, bod: Int): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val facts = cat.amendmentFacts.getOrElse(
       throw HttpError(404, s"Period $period has no amendment facts loaded"))
     val lang = langParam(q)
-    cache.getOrCompute(
+    memo(
         GraftServer.key("amendment_detail", period, schuze, bod, lang)) {
       withTimeout(15000, "amendment detail") {
         val grouped = rows(Details.amendmentDetail(facts, schuze, bod))
@@ -577,11 +577,11 @@ class GraftServer(
     * per-MP labels for one amendment vote.
     */
   private def amendmentMpVotesRoute(q: Map[String, String],
-      schuze: Int, bod: Int): String = {
+      schuze: Int, bod: Int): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val id = q.get("vote").flatMap(_.toLongOption)
       .getOrElse(throw HttpError(422, "Missing or invalid 'vote' param"))
-    cache.getOrCompute(
+    memo(
         GraftServer.key("amendment_mp", period, schuze, bod, id)) {
       withTimeout(15000, "amendment MP votes") {
         val d = cat.analyzer.data
@@ -591,7 +591,7 @@ class GraftServer(
               col("zdrzel"), col("nehlasoval"), col("vysledek")))
           .getOrElse(throw HttpError(404, s"Vote $id not found"))
         s"""{"vote":$header,""" +
-          s""""party_breakdown":${rows(namedBreakdown(d, id))},""" +
+          s""""party_breakdown":${rows(cat.analyzer.voteDetail(id))},""" +
           s""""mp_votes":${rows(Details.amendmentMpList(d.mpVotes, d.mpInfo, id))}}"""
       }
     }
@@ -660,15 +660,13 @@ class GraftServer(
         // chart pages take no query params
         case _ => Nil
       }
-      val html = cache.getOrCompute(GraftServer.key(
+      val html = memo(GraftServer.key(
           "pages", period, (Seq(route, lang) ++ keyed): _*)) { route match {
         case "" =>
           PageRender.page(t("Přehled období", "Period overview"), lang, period,
             PageRender.table(cat.analyzer.periodStats(), lang))
         case "votes" =>
-          val page = intParam(q, "page", 1, 1, 1000)
-          val pr = graft.psp.VotesBrowser.listVotesPaged(
-            d.votes.sparkSession, d.votes, d.voidVotes, None, None, None, page)
+          val pr = cat.analyzer.listVotesPaged(page = intParam(q, "page", 1, 1, 1000))
           PageRender.page(t("Hlasování", "Votes"), lang, period,
             PageRender.table(pr.rows
               .withColumn("outcome_label",
@@ -676,14 +674,14 @@ class GraftServer(
               s"<p>${t("strana", "page")} ${pr.page}/${pr.totalPages}</p>")
         case GraftServer.VoteDetailPath(idStr) =>
           val id = idStr.toLong
-          val info = Details.voteInfo(d.votes, d.tiskLookup, cat.voteTopics, id, lang)
-          if (info.isEmpty) throw HttpError(404, s"Vote $id not found")
+          val detail = cat.analyzer.voteDetailRow(id, lang, cat.voteTopics)
+          if (detail.isEmpty) throw HttpError(404, s"Vote $id not found")
           PageRender.page(t(s"Hlasování $id", s"Vote $id"), lang, period,
-            PageRender.table(info, lang) +
+            PageRender.table(detail.select("info.*"), lang) +
               s"<h2>${t("Podle stran", "By party")}</h2>" +
-              PageRender.table(namedBreakdown(d, id), lang) +
+              PageRender.table(detail.select(inline(col("party_breakdown"))), lang) +
               s"<h2>${t("Poslanci", "MPs")}</h2>" +
-              PageRender.table(Details.voteMpList(d.mpVotes, d.mpInfo, id), lang))
+              PageRender.table(detail.select(inline(col("mp_votes"))), lang))
         case "laws" =>
           val laws = cat.laws.getOrElse(
             throw HttpError(404, s"Period $period has no laws table loaded"))
@@ -721,10 +719,8 @@ class GraftServer(
           val page = intParam(q, "page", 1, 1, 1000)
           val search = strParam(q, "search", 200)
           val outcome = strParam(q, "outcome", 10)
-          val pr = graft.psp.VotesBrowser.listVotesPaged(
-            d.votes.sparkSession, d.votes, d.voidVotes,
-            Some(search).filter(_.nonEmpty), Some(outcome).filter(_.nonEmpty),
-            None, page)
+          val pr = cat.analyzer.listVotesPaged(Some(search).filter(_.nonEmpty),
+            Some(outcome).filter(_.nonEmpty), None, page)
           PageRender.listFragment(
             pr.rows.withColumn("outcome_label",
               Details.outcomeLabel(col("vysledek"), lang)),
@@ -769,7 +765,7 @@ class GraftServer(
 
         case other => throw HttpError(404, s"No page /$other")
       } }
-      send(ex, 200, html, "text/html; charset=utf-8")
+      sendBytes(ex, 200, html, "text/html; charset=utf-8")
     } catch {
       case HttpError(status, detail) =>
         send(ex, status, s"""{"detail":${jstr(detail)}}""")
@@ -898,10 +894,10 @@ class GraftServer(
     concat(col("jmeno"), lit(" "), col("prijmeni"),
       lit(" ("), coalesce(col("party"), lit("?")), lit(")"))
 
-  private def chartLoyaltyRoute(q: Map[String, String]): String = {
+  private def chartLoyaltyRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-    cache.getOrCompute(GraftServer.key("chart_loyalty", period, top)) {
+    memo(GraftServer.key("chart_loyalty", period, top)) {
       withTimeout(20000, "loyalty chart") {
         rows(cat.analyzer.loyalty(top)
           .select(chartLabel.as("label"), col("rebellion_pct").as("value")))
@@ -917,13 +913,13 @@ class GraftServer(
     "most_passive" -> "passive", "most_absent" -> "absent",
     "most_yes" -> "yes_votes", "most_no" -> "no_votes")
 
-  private def chartAttendanceRoute(q: Map[String, String]): String = {
+  private def chartAttendanceRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
     val field = AttendanceChartField.getOrElse(sort, "attendance_pct")
-    cache.getOrCompute(GraftServer.key("chart_attendance", period, top, sort, party)) {
+    memo(GraftServer.key("chart_attendance", period, top, sort, party)) {
       withTimeout(20000, "attendance chart") {
         rows(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty))
           .select(chartLabel.as("label"), col(field).as("value")))
@@ -931,9 +927,9 @@ class GraftServer(
     }
   }
 
-  private def chartSimilarityRoute(q: Map[String, String]): String = {
+  private def chartSimilarityRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    cache.getOrCompute(GraftServer.key("chart_similarity", period)) {
+    memo(GraftServer.key("chart_similarity", period)) {
       withTimeout(30000, "similarity chart") {
         // pcaCoords already serves the chart shape (mp_name, party, x, y)
         rows(cat.analyzer.pcaCoords())
@@ -943,6 +939,8 @@ class GraftServer(
 }
 
 object GraftServer {
+  val JsonType = "application/json; charset=utf-8"
+
   /** Reference `config.py` PERIOD_YEARS — the valid electoral periods. */
   val PeriodYears: Map[Int, String] = Map(
     10 -> "2025", 9 -> "2021", 8 -> "2017", 7 -> "2013", 6 -> "2010",

@@ -413,11 +413,13 @@ class GraftServerSpec extends SparkSpec {
       // Dvořák votes against his club on one of two votes
       assert(before.body().contains("Dvořák"))
       assert(before.body().contains("\"rebellion_pct\":50.0"))
-      Seq("/api/votes?period=10&search=prvni", "/api/votes/1?period=10",
-        "/api/stats?period=10")
+      Seq("/api/votes?period=10&search=prvni", "/api/stats?period=10")
         .foreach(path => assert(get(path, at).statusCode() == 200, path))
-      // both read MP 3's vote 1, which the new file flips
-      val changing = Seq("/api/attendance?period=10", "/api/similarity?period=10")
+      // all but the listing read MP 3's vote 1, which the new MP-vote file
+      // flips; the listing reads only the votes file, whose vote 2 is
+      // renamed
+      val changing = Seq("/api/attendance?period=10", "/api/similarity?period=10",
+        "/api/votes/1?period=10", "/api/votes?period=10")
       val bodies = changing.map { path =>
         val r = get(path, at)
         assert(r.statusCode() == 200, path)
@@ -425,6 +427,9 @@ class GraftServerSpec extends SparkSpec {
       }
       Fixtures.writeUnl(dir, "hl-10", "hl10h1.unl",
         Fixtures.UnlMpVotes.map { case "3|1|B" => "3|1|A"; case l => l })
+      Fixtures.writeUnl(dir, "hl-10", "hl10s.unl", Seq(
+        "1|174|1|1|1|2024-01-10|10:00|2|1|0|0|3|2|N|A|První hlasování|PH1|",
+        "2|174|1|2|1|2024-01-11|10:00|3|0|0|0|3|2|N|A|Druhé hlasování znovu|PH2|"))
       assert(srv.refreshPeriod(10, catalog()) >= 1)
       val after = get("/api/loyalty?period=10", at)
       assert(after.statusCode() == 200)
@@ -507,6 +512,80 @@ class GraftServerSpec extends SparkSpec {
       assert(r.body() == srv.rows(new Analyzer(d).loyalty(3)))
     } finally {
       GraftServerSpec.Stall.set(false)
+      srv.stop()
+    }
+  }
+
+  test("a vote-listing base build cancelled by a 504 is not kept: the " +
+      "next call builds it again and answers 200") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // vote rows stall while the flag is set, so the first listing call's
+    // base build outlasts its budget
+    val stall = udf { (v: String) =>
+      while (GraftServerSpec.Stall.get) Thread.sleep(10)
+      v
+    }.asNondeterministic()
+    val cat = fixtureCatalog()
+    val d = cat.analyzer.data
+    val stalling = cat.copy(analyzer = new Analyzer(d.copy(
+      votes = d.votes.repartition(4).withColumn("nazev_kratky", stall(col("nazev_kratky"))))))
+    val srv = new GraftServer(Map(1 -> stalling),
+      timeoutMillis = budget => if (GraftServerSpec.Stall.get) 1000 else budget).start()
+    GraftServerSpec.Stall.set(true)
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      assert(get("/api/votes?period=1&search=vote", at).statusCode() == 504)
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(tracker.getActiveJobIds.isEmpty)
+      GraftServerSpec.Stall.set(false)
+      val r = get("/api/votes?period=1&search=vote", at)
+      assert(r.statusCode() == 200, r.body())
+      val fresh = new GraftServer(Map(1 -> fixtureCatalog())).start()
+      try assert(r.body() ==
+        get("/api/votes?period=1&search=vote", s"http://127.0.0.1:${fresh.boundPort}").body())
+      finally fresh.stop()
+    } finally {
+      GraftServerSpec.Stall.set(false)
+      srv.stop()
+    }
+  }
+
+  test("PCA is computed once per Analyzer: after /api/pca, the PNG and " +
+      "chart-data routes run no SVD job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    // jobs of this server's calls (their job groups), and the SVD's among them
+    val started, ended, svd = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("graft-serving-"))) {
+          started.incrementAndGet()
+          if (js.stageInfos.exists(_.name.startsWith("treeAggregate"))) svd.incrementAndGet()
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    // the listener bus is asynchronous: wait for the ends of the jobs seen
+    def settled(): Int = {
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (ended.get < started.get && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(300)
+      svd.get
+    }
+    val srv = new GraftServer(Map(1 -> fixtureCatalog())).start()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      assert(get("/api/pca?period=1", at).statusCode() == 200)
+      val first = settled()
+      assert(first > 0, "the first PCA route ran no SVD job")
+      assert(get("/api/similarity.png?period=1", at).statusCode() == 200)
+      assert(get("/api/charts/similarity?period=1", at).statusCode() == 200)
+      assert(settled() == first, "a later PCA route ran the SVD again")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
       srv.stop()
     }
   }
