@@ -48,6 +48,9 @@ object VectorOps {
     * Sign of each component is arbitrary — consumers must compare
     * sign-invariantly (SURVEY §7.4). Uses mllib RowMatrix SVD, which for
     * small feature dims solves the Gramian locally; rows stay distributed.
+    * The scores come back materialized (an eager local checkpoint), and
+    * the two RDDs cached on the way are released before it returns, so a
+    * long-lived session keeps nothing from a call but its result.
     */
   def pca2(df: DataFrame, idCol: String, featCol: String): DataFrame = {
     import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
@@ -55,39 +58,39 @@ object VectorOps {
     val spark = df.sparkSession
     val rows = df.select(col(idCol).cast("long"), col(featCol).cast("array<double>"))
       .rdd.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    CacheRegistry.trackRdd(rows.cache())
-    val dim = rows.first()._2.length
-    val n = rows.count().toDouble
-    val means = rows.map(_._2).treeAggregate(new Array[Double](dim))(
-      (acc, v) => { var i = 0; while (i < dim) { acc(i) += v(i); i += 1 }; acc },
-      (a, b) => { var i = 0; while (i < dim) { a(i) += b(i); i += 1 }; a })
-      .map(_ / n)
-    val bMeans = spark.sparkContext.broadcast(means)
-    val centered = rows.mapValues { v =>
-      val m = bMeans.value
-      val out = new Array[Double](dim)
-      var i = 0; while (i < dim) { out(i) = v(i) - m(i); i += 1 }
-      out
-    }.cache()
-    CacheRegistry.trackRdd(centered)
-    val mat = new RowMatrix(centered.values.map(OldVectors.dense))
-    val svd = serialSvd(mat, math.min(2, dim))
-    // `centered` is materialized by the SVD's actions — `rows` is no
-    // longer needed by anything downstream
-    rows.unpersist(blocking = false)
-    // dim x (at most 2): a rank-deficient matrix (one vote column, or
-    // constant columns) yields fewer components; a missing one scores 0,
-    // as its zero singular value does in the reference's full SVD
-    val v = svd.V
-    def comp(i: Int, j: Int) = if (j < v.numCols) v(i, j) else 0.0
-    val bV = spark.sparkContext.broadcast((0 until dim).map(i => (comp(i, 0), comp(i, 1))).toArray)
-    import spark.implicits._
-    centered.map { case (id, c) =>
-      val vv = bV.value
-      var x = 0.0; var y = 0.0; var i = 0
-      while (i < dim) { x += c(i) * vv(i)._1; y += c(i) * vv(i)._2; i += 1 }
-      (id, x, y)
-    }.toDF(idCol, "pc1", "pc2")
+      .cache()
+    try {
+      val dim = rows.first()._2.length
+      val n = rows.count().toDouble
+      val means = rows.map(_._2).treeAggregate(new Array[Double](dim))(
+        (acc, v) => { var i = 0; while (i < dim) { acc(i) += v(i); i += 1 }; acc },
+        (a, b) => { var i = 0; while (i < dim) { a(i) += b(i); i += 1 }; a })
+        .map(_ / n)
+      val bMeans = spark.sparkContext.broadcast(means)
+      val centered = rows.mapValues { v =>
+        val m = bMeans.value
+        val out = new Array[Double](dim)
+        var i = 0; while (i < dim) { out(i) = v(i) - m(i); i += 1 }
+        out
+      }.cache()
+      try {
+        val mat = new RowMatrix(centered.values.map(OldVectors.dense))
+        val svd = serialSvd(mat, math.min(2, dim))
+        // dim x (at most 2): a rank-deficient matrix (one vote column, or
+        // constant columns) yields fewer components; a missing one scores 0,
+        // as its zero singular value does in the reference's full SVD
+        val v = svd.V
+        def comp(i: Int, j: Int) = if (j < v.numCols) v(i, j) else 0.0
+        val bV = spark.sparkContext.broadcast((0 until dim).map(i => (comp(i, 0), comp(i, 1))).toArray)
+        import spark.implicits._
+        centered.map { case (id, c) =>
+          val vv = bV.value
+          var x = 0.0; var y = 0.0; var i = 0
+          while (i < dim) { x += c(i) * vv(i)._1; y += c(i) * vv(i)._2; i += 1 }
+          (id, x, y)
+        }.toDF(idCol, "pc1", "pc2").localCheckpoint(eager = true)
+      } finally centered.unpersist(blocking = false)
+    } finally rows.unpersist(blocking = false)
   }
 
   /** PCA invariant audit (VERDICT r14 order #1e — retires the q34

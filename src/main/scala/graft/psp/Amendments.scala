@@ -131,12 +131,4 @@ object Amendments {
       .join(revotes, Seq("schuze", "bod", "letter", "vote_number"), "left")
       .withColumn("revotes", coalesce(col("revotes"), array()))
   }
-
-  /** Per-MP votes on one amendment (amendment_service.py:275-339). */
-  def amendmentMpVotes(
-      mpVotes: DataFrame, mpInfo: DataFrame, idHlasovani: Long): DataFrame =
-    mpVotes.filter(col("id_hlasovani") === idHlasovani)
-      .join(broadcast(mpInfo), Seq("id_poslanec"), "inner")
-      .select("party", "prijmeni", "jmeno", "vysledek")
-      .orderBy("party", "prijmeni", "jmeno")
 }

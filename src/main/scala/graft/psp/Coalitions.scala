@@ -95,19 +95,18 @@ object Coalitions {
   }
 
   /** All three coalition outputs with the shared rebellion relation
-    * computed once (rebels and cohesion both consume
+    * computed once and kept [[Resident]] (rebels and cohesion both consume
     * withRebellion(active) — separately they shuffle the fact table
-    * twice for the same intermediate).
+    * twice for the same intermediate); the ContextCleaner frees it with
+    * the returned frames.
     */
   def all(
       mpVotes: DataFrame, voidVotes: DataFrame, mpInfo: DataFrame,
       amendVoteIds: DataFrame, topRebels: Int = 20)
       : (DataFrame, DataFrame, DataFrame) = {
     val active = activeWithParty(mpVotes, voidVotes, mpInfo)
-    val withDir = graft.operators.CacheRegistry.track(
-      Majority.withRebellion(
-          active, Seq("id_hlasovani", "party"), "vysledek", VoteResult.Yes, VoteResult.No)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val withDir = Resident(Majority.withRebellion(
+      active, Seq("id_hlasovani", "party"), "vysledek", VoteResult.Yes, VoteResult.No))
     (partyAgreement(mpVotes, voidVotes, mpInfo, amendVoteIds),
       rebelsFrom(withDir, mpInfo, amendVoteIds, topRebels),
       cohesionFrom(withDir, amendVoteIds))

@@ -59,15 +59,6 @@ object Details {
 
   def amendmentVoteLabel(c: Column): Column = labelCol(c, AmendmentVoteLabels)
 
-  /** Per-MP listing for one amendment vote
-    * (`amendment_service.py:275-339`): vote_code + amendment-style label.
-    */
-  def amendmentMpList(mpVotes: DataFrame, mpInfo: DataFrame,
-      idHlasovani: Long): DataFrame =
-    Amendments.amendmentMpVotes(mpVotes, mpInfo, idHlasovani)
-      .withColumn("vote_code", col("vysledek"))
-      .withColumn("vote_label", amendmentVoteLabel(col("vysledek")))
-
   /** Language-resolved topic column: `topic_en` when present AND lang=en,
     * else `topic` (reference `tisk.topics_en if lang == "en" and
     * tisk.topics_en else tisk.topics`).
@@ -183,14 +174,29 @@ object Details {
       voteId: Long, lang: String): DataFrame = {
     val one = infoNarrow(ofVote(base, voteId), topics, lang)
     val info = one.columns.filterNot(Set("party_breakdown", "mp_votes"))
-    one.select(
-      struct(info.map(col): _*).as("info"),
-      col("party_breakdown"),
-      transform(col("mp_votes"), m => struct(m.getField("party").as("party"),
-        m.getField("prijmeni").as("prijmeni"), m.getField("jmeno").as("jmeno"),
-        m.getField("vysledek").as("vysledek"),
-        mpVoteLabel(m.getField("vysledek")).as("vote_label"))).as("mp_votes"))
+    one.select(struct(info.map(col): _*).as("info"), col("party_breakdown"),
+      labeledMps(v => Seq(mpVoteLabel(v).as("vote_label"))))
   }
+
+  /** [[voteDetailBase]]'s `mp_votes`, each MP's struct extended by
+    * `labels` of its vote code.
+    */
+  private def labeledMps(labels: Column => Seq[Column]): Column =
+    transform(col("mp_votes"), m => struct(
+      Seq("party", "prijmeni", "jmeno", "vysledek").map(f => m.getField(f).as(f)) ++
+        labels(m.getField("vysledek")): _*)).as("mp_votes")
+
+  /** One amendment vote's MP-votes page from [[voteDetailBase]]
+    * (`amendment_service.py:275-339`) as a single row: the `vote` header
+    * (id and counts), `party_breakdown`, and `mp_votes` with each MP's
+    * `vote_code` and amendment-style `vote_label`; 0 rows = unknown vote.
+    */
+  def amendmentVoteNarrow(base: DataFrame, voteId: Long): DataFrame =
+    ofVote(base, voteId).select(
+      struct(Seq("id_hlasovani", "pro", "proti", "zdrzel", "nehlasoval", "vysledek")
+        .map(col): _*).as("vote"),
+      col("party_breakdown"),
+      labeledMps(v => Seq(v.as("vote_code"), amendmentVoteLabel(v).as("vote_label"))))
 
   /** Vote metadata for one `id_hlasovani` (`_build_vote_info`,
     * `votes_service.py:207-262` minus the scrape-side history matching):
@@ -232,14 +238,7 @@ object Details {
       if (laws.columns.contains("summary"))
         langCol(laws, "summary", "summary_en", lang)
       else lit("")
-    val topicsCol =
-      if (lang == "en" && laws.columns.contains("topics_en"))
-        when(size(col("topics_en")) > 0, col("topics_en"))
-          .otherwise(col("topics"))
-      else col("topics")
-    val law = LawsBrowser.dedupeLaws(laws)
-      .filter(col("ct") === ct)
-      .withColumn("topics", topicsCol)
+    val law = LawsBrowser.inLang(LawsBrowser.dedupeLaws(laws).filter(col("ct") === ct), lang)
       .withColumn("summary", summaryCol)
       .drop("topics_en", "summary_en")
     val entries = bills match {

@@ -55,6 +55,16 @@ object LawsBrowser {
       perPage: Int = 20): DataFrame =
     listLawsPaged(laws, search, statusFilter, topicFilter, page, perPage).rows
 
+  /** `laws` with `topics` in `lang`: under "en", a row's `topics_en` when
+    * the TopicPipeline attached that column and the row has any
+    * (`law_service.py` topics_en), else its Czech `topics`.
+    */
+  def inLang(laws: DataFrame, lang: String): DataFrame =
+    if (lang == "en" && laws.columns.contains("topics_en"))
+      laws.withColumn("topics",
+        when(size(col("topics_en")) > 0, col("topics_en")).otherwise(col("topics")))
+    else laws
+
   /** Distinct topic labels across a period's laws (reference
     * `tisk_models.py:147-160`): explode + distinct.
     */

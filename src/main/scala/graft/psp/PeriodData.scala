@@ -80,10 +80,11 @@ object PeriodLoader {
   * Each analysis keeps its request-independent work — its `base` —
   * [[Resident]] from its first use for the life of this Analyzer, like
   * the reference's in-memory frames: loyalty, attendance and cross-party
-  * similarity narrow theirs to a party, order and `top`; the vote listing
-  * and vote detail filter theirs; the PCA coordinates take no parameters
-  * and are the base itself. A refresh builds a new Analyzer, so a base
-  * never outlives the data it was built from.
+  * similarity narrow theirs to a party, order and `top`; the vote listing,
+  * the vote detail and the amendment MP votes filter theirs; the PCA
+  * coordinates take no parameters and are the base itself. A refresh
+  * builds a new Analyzer, so a base never outlives the data it was built
+  * from.
   */
 class Analyzer(val data: PeriodData) {
   private val loyaltyBase = new Resident.OnFirstUse(
@@ -138,6 +139,13 @@ class Analyzer(val data: PeriodData) {
   /** One vote's (party, prijmeni, jmeno, vysledek) rows, in that order. */
   def voteMpVotes(voteId: Long): DataFrame =
     Details.ofVote(voteDetailBase(), voteId).select(inline(col("mp_votes")))
+
+  /** One amendment vote's header, per-party counts and labeled MP list
+    * as one row (see [[Details.amendmentVoteNarrow]]); 0 rows = unknown
+    * vote.
+    */
+  def amendmentVoteRow(voteId: Long): DataFrame =
+    Details.amendmentVoteNarrow(voteDetailBase(), voteId)
 
   def coalitions(amendVoteIds: DataFrame, topRebels: Int = 20)
       : (DataFrame, DataFrame, DataFrame) =

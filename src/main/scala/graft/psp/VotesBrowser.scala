@@ -71,19 +71,6 @@ object VotesBrowser {
       perPage: Int = 30): Browse.PagedResult =
     listNarrow(listBase(votes, voidVotes), search, outcome, topicKeys, page, perPage)
 
-  /** Paged vote listing (rows only — see [[listVotesPaged]] for totals). */
-  def listVotes(
-      spark: SparkSession,
-      votes: DataFrame,
-      voidVotes: DataFrame,
-      search: Option[String] = None,
-      outcome: Option[String] = None,
-      topicKeys: Option[DataFrame] = None,
-      page: Int = 1,
-      perPage: Int = 30): DataFrame =
-    listVotesPaged(spark, votes, voidVotes, search, outcome, topicKeys,
-      page, perPage).rows
-
   /** Per-party breakdown for one vote (votes_service.py:265-280, A4):
     * `<code>_cnt` per vote code and `total_cnt`, sorted by party.
     */

@@ -4,7 +4,7 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentH
 
 /** Serving-layer result memoization (reference
   * `services/analysis_cache.py:11-48`): TTL'd, thread-safe, with prefix
-  * invalidation — keys look like `loyalty:{period}:{top}:{party}`.
+  * or predicate invalidation — keys look like `loyalty:{period}:{top}:{party}`.
   * Orthogonal to Spark (caches COLLECTED results, not plans); the Spark
   * analog for hot inputs is `df.persist`, used separately.
   *
@@ -82,16 +82,27 @@ class AnalysisCache[V](ttlMillis: Long = 3600L * 1000,
   /** Invalidate every key starting with `prefix` (reference semantics:
     * a data refresh drops `loyalty:` etc. wholesale).
     */
-  def invalidatePrefix(prefix: String): Int = synchronized {
+  def invalidatePrefix(prefix: String): Int = invalidateIf(_.startsWith(prefix))
+
+  /** Invalidate every key `drop` accepts; returns the number of stored
+    * entries dropped.
+    */
+  def invalidateIf(drop: String => Boolean): Int = synchronized {
     // later callers start a new computation instead of joining one that
     // may read the data being invalidated
-    inFlight.keySet().removeIf(_.startsWith(prefix))
+    inFlight.keySet().removeIf(k => drop(k))
     var n = 0
     val it = store.keySet().iterator()
     while (it.hasNext) {
-      if (it.next().startsWith(prefix)) { it.remove(); n += 1 }
+      if (drop(it.next())) { it.remove(); n += 1 }
     }
     n
+  }
+
+  /** The stored keys, expired or not. */
+  private[serving] def keys: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    store.keySet().asScala.toSet
   }
 
   def size: Int = store.size()

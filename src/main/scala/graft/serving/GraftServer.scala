@@ -43,11 +43,13 @@ case class PeriodCatalog(
   *  - param envelopes: top ∈ [1, Analyzer.MaxTop = 200], page ∈ [1,1000],
   *    bounded string lengths → 422 outside them (FastAPI
   *    Query(ge/le/max_length) parity)
-  *  - result memoization through [[AnalysisCache]] with the reference's
-  *    key scheme `loyalty:{period}:{top}:{party}` (`routes/voting.py:34`)
+  *  - result memoization through one [[AnalysisCache]] with the
+  *    reference's key scheme `loyalty:{period}:{top}:{party}`
+  *    (`routes/voting.py:34`)
   *  - per-route rate limits (60/120/30/15 per minute, `@limiter.limit`)
-  *  - compute timeouts: 15 s loyalty/attendance, 30 s similarity/PCA
-  *    (`middleware.run_with_timeout`) → 504 on expiry
+  *  - compute timeouts (`middleware.run_with_timeout`) → 504 on expiry:
+  *    30 s similarity/PCA/coalitions, 20 s charts, 15 s every other route
+  *    that runs Spark
   *  - a data refresh clears the whole cache (`data_reader.py:444`);
   *    [[invalidatePeriod]] covers the amendment pipeline's prefix
   *    invalidation (`data_reader.py:468-469`)
@@ -98,17 +100,14 @@ class GraftServer(
     computePool.shutdown()
   }
 
-  /** Data-refresh invalidation for one period: every cache key scheme
-    * embeds the period as the second `:`-separated field, so dropping
-    * `prefix:period:` for each route prefix clears exactly that period's
-    * results (the reference's amendment-pipeline shape,
+  /** Data-refresh invalidation for one period: drops every key whose
+    * period field ([[GraftServer.periodOf]]) is `period`, whatever its
+    * route (the reference's amendment-pipeline shape,
     * `data_reader.py:468-469`; its full-reload path just calls
-    * `cache.invalidatePrefix("")`).
+    * `cache.invalidatePrefix("")`). Returns the number of entries dropped.
     */
   def invalidatePeriod(period: Int): Int =
-    GraftServer.KeyPrefixes.map(p => cache.invalidatePrefix(s"$p:$period:")).sum +
-      GraftServer.PngKeyPrefixes
-        .map(p => pngCache.invalidatePrefix(s"$p:$period:")).sum
+    cache.invalidateIf(GraftServer.periodOf(_).contains(period))
 
   // ------------------------------------------------------------- plumbing
 
@@ -256,12 +255,15 @@ class GraftServer(
       .collect().map(_.getString(0))
       .mkString("[", ",", "]")
 
-  /** `body` memoized under `key` as the UTF-8 bytes every response
-    * sends: half the memory of the JSON's UTF-16 string, whose Czech
-    * names rule out Java's one-byte form, and no re-encoding per hit.
+  /** The one request step of every route that runs Spark: `body`
+    * memoized under `key`, computed under [[withTimeout]]'s budget. A body
+    * returns the bytes the response sends; JSON and HTML are kept as
+    * UTF-8, half the memory of their UTF-16 strings, whose Czech names
+    * rule out Java's one-byte form, and no re-encoding per hit.
     */
-  private def memo(key: String)(body: => String): Array[Byte] =
-    cache.getOrCompute(key)(utf8(body))
+  private def answer(key: String, budgetMillis: Long, label: String)(
+      body: => Array[Byte]): Array[Byte] =
+    cache.getOrCompute(key)(withTimeout(budgetMillis, label)(body))
 
   private def paged(r: graft.operators.Browse.PagedResult): String =
     s"""{"rows":${rows(r.rows)},"total":${r.total},"page":${r.page},""" +
@@ -290,19 +292,13 @@ class GraftServer(
       val limit = limits.getOrElse(limitGroup, 120)
       if (!limiter.allow(rateKey(ex, limitGroup), limit))
         throw HttpError(429, s"Rate limit exceeded: $limit per minute")
-      route match {
-        case "loyalty.png" | "attendance.png" | "similarity.png" =>
-          sendBytes(ex, 200, pngRoute(route, q), "image/png")
-          return
-        case _ =>
-      }
       val body = route match {
         case "health" =>
           utf8(s"""{"status":"ok","periods_loaded":[${livePeriods.keys.toSeq.sorted.mkString(",")}]}""")
         case "loyalty" => loyaltyRoute(q)
         case "attendance" => attendanceRoute(q)
         case "similarity" => similarityRoute(q)
-        case "pca" => pcaRoute(q)
+        case "pca" | "charts/similarity" => pcaRoute(q)
         case "votes" => votesRoute(q)
         case "laws" => lawsRoute(q)
         case "amendments" => amendmentsRoute(q)
@@ -316,13 +312,16 @@ class GraftServer(
         case "stats" => statsRoute(q)
         case "topics" => topicsRoute(q)
         case "statuses" => statusesRoute(q)
-        case "tisk-text" => utf8(tiskTextRoute(q))
-        case "charts/loyalty" => chartLoyaltyRoute(q)
-        case "charts/attendance" => chartAttendanceRoute(q)
-        case "charts/similarity" => chartSimilarityRoute(q)
+        case "tisk-text" => tiskTextRoute(q)
+        case "charts/loyalty" => loyaltyChartRoute(q, png = false)
+        case "charts/attendance" => attendanceChartRoute(q, png = false)
+        case "loyalty.png" => loyaltyChartRoute(q, png = true)
+        case "attendance.png" => attendanceChartRoute(q, png = true)
+        case "similarity.png" => similarityPngRoute(q)
         case other => throw HttpError(404, s"No route /api/$other")
       }
-      sendBytes(ex, 200, body)
+      sendBytes(ex, 200, body,
+        if (route.endsWith(".png")) "image/png" else GraftServer.JsonType)
     } catch {
       case HttpError(status, detail) =>
         send(ex, status, s"""{"detail":${jstr(detail)}}""")
@@ -335,10 +334,8 @@ class GraftServer(
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val party = strParam(q, "party", 200)
-    memo(GraftServer.key("loyalty", period, top, party)) {
-      withTimeout(15000, "loyalty analysis") {
-        rows(cat.analyzer.loyalty(top, Some(party).filter(_.nonEmpty)))
-      }
+    answer(GraftServer.key("loyalty", period, top, party), 15000, "loyalty analysis") {
+      utf8(rows(cat.analyzer.loyalty(top, Some(party).filter(_.nonEmpty))))
     }
   }
 
@@ -347,31 +344,28 @@ class GraftServer(
     val top = intParam(q, "top", 30, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
-    memo(GraftServer.key("attendance", period, top, sort, party)) {
-      withTimeout(15000, "attendance analysis") {
-        rows(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty)))
-      }
+    answer(GraftServer.key("attendance", period, top, sort, party), 15000,
+        "attendance analysis") {
+      utf8(rows(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty))))
     }
   }
 
   private def similarityRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-    memo(GraftServer.key("similarity", period, top)) {
-      withTimeout(30000, "similarity analysis") {
-        rows(cat.analyzer.crossPartySimilarity(top))
-      }
+    answer(GraftServer.key("similarity", period, top), 30000, "similarity analysis") {
+      utf8(rows(cat.analyzer.crossPartySimilarity(top)))
     }
   }
 
+  /** `/api/pca` and `/api/charts/similarity`: the coordinates already
+    * have the chart's shape (mp_name, party, x, y), so both share one
+    * entry.
+    */
   private def pcaRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    // trailing ':' keeps period-prefix invalidation exact ("pca:1:" can
-    // never prefix-match a period-10 key)
-    memo(GraftServer.key("similarity_pca", period)) {
-      withTimeout(30000, "PCA analysis") {
-        rows(cat.analyzer.pcaCoords())
-      }
+    answer(GraftServer.key("similarity_pca", period), 30000, "PCA analysis") {
+      utf8(rows(cat.analyzer.pcaCoords()))
     }
   }
 
@@ -382,61 +376,45 @@ class GraftServer(
     val topic = strParam(q, "topic", 200)
     val page = intParam(q, "page", 1, 1, 1000)
     val lang = langParam(q)
-    memo(
-        GraftServer.key("votes", period, search, outcome, topic, page, lang)) {
-      withTimeout(15000, "vote listing") {
-        val topicKeys = Some(topic).filter(_.nonEmpty).flatMap { t =>
-          cat.voteTopics.map(_.filter(col("topic") === t).select("schuze", "bod"))
-        }
-        val pr = cat.analyzer.listVotesPaged(Some(search).filter(_.nonEmpty),
-          Some(outcome).filter(_.nonEmpty), topicKeys, page)
-        // `_enrich_vote_rows` (votes_service.py:135-144): localized outcome
-        // label on each listed row — serving-layer projection only, so the
-        // browser query itself stays oracle-comparable
-        paged(pr.copy(rows = pr.rows.withColumn("outcome_label",
-          Details.outcomeLabel(col("vysledek"), lang))))
+    answer(GraftServer.key("votes", period, search, outcome, topic, page, lang), 15000,
+        "vote listing") {
+      val topicKeys = Some(topic).filter(_.nonEmpty).flatMap { t =>
+        cat.voteTopics.map(_.filter(col("topic") === t).select("schuze", "bod"))
       }
+      val pr = cat.analyzer.listVotesPaged(Some(search).filter(_.nonEmpty),
+        Some(outcome).filter(_.nonEmpty), topicKeys, page)
+      // `_enrich_vote_rows` (votes_service.py:135-144): localized outcome
+      // label on each listed row — serving-layer projection only, so the
+      // browser query itself stays oracle-comparable
+      utf8(paged(pr.copy(rows = withOutcome(pr.rows, lang))))
     }
   }
 
   private def lawsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    val laws = cat.laws.getOrElse(
-      throw HttpError(404, s"Period $period has no laws table loaded"))
+    val laws = lawsOf(period, cat)
     val search = strParam(q, "search", 200)
     val status = strParam(q, "status", 200)
     val topic = strParam(q, "topic", 200)
     val page = intParam(q, "page", 1, 1, 1000)
     val lang = langParam(q)
-    memo(
-        GraftServer.key("laws", period, search, status, topic, page, lang)) {
-      // English listings browse (and topic-filter) the English labels
-      // when the TopicPipeline attached them (`law_service.py` topics_en)
-      val langLaws =
-        if (lang == "en" && laws.columns.contains("topics_en"))
-          laws.withColumn("topics",
-            when(size(col("topics_en")) > 0, col("topics_en"))
-              .otherwise(col("topics")))
-        else laws
-      // raw `status` stays (reference parity + filter compatibility);
-      // `status_label` localizes the canonical trio for en readers
-      val res = LawsBrowser.listLawsPaged(
-        langLaws, Some(search).filter(_.nonEmpty), Some(status).filter(_.nonEmpty),
+    answer(GraftServer.key("laws", period, search, status, topic, page, lang), 15000,
+        "law listing") {
+      val res = LawsBrowser.listLawsPaged(LawsBrowser.inLang(laws, lang),
+        Some(search).filter(_.nonEmpty), Some(status).filter(_.nonEmpty),
         Some(topic).filter(_.nonEmpty), page)
-      paged(res.copy(rows = res.rows
-        .withColumn("status_label", I18n.statusLabel(col("status"), lang))))
+      utf8(paged(res.copy(rows = withStatus(res.rows, lang))))
     }
   }
 
   private def amendmentsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    val bills = cat.amendmentBills.getOrElse(
-      throw HttpError(404, s"Period $period has no amendment table loaded"))
+    val bills = billsOf(period, cat)
     val search = strParam(q, "search", 200)
     val page = intParam(q, "page", 1, 1, 1000)
-    memo(GraftServer.key("amendments", period, search, page)) {
-      paged(Amendments.listBillsPaged(
-        bills, cat.analyzer.data.tiskLookup, Some(search).filter(_.nonEmpty), page))
+    answer(GraftServer.key("amendments", period, search, page), 15000, "amendment listing") {
+      utf8(paged(Amendments.listBillsPaged(
+        bills, cat.analyzer.data.tiskLookup, Some(search).filter(_.nonEmpty), page)))
     }
   }
 
@@ -444,16 +422,10 @@ class GraftServer(
     val (period, cat) = periodCatalog(q)
     val amendIds = cat.amendVoteIds.getOrElse(
       throw HttpError(404, s"Period $period has no amendment votes loaded"))
-    memo(GraftServer.key("amendment-coalitions", period)) {
-      withTimeout(30000, "coalition analysis") {
-        val d = cat.analyzer.data
-        val (agreement, rebels, cohesion) =
-          Coalitions.all(d.mpVotes, d.voidVotes, d.mpInfo, amendIds)
-        val out = s"""{"party_agreement":${rows(agreement)},""" +
-          s""""rebels":${rows(rebels)},"cohesion":${rows(cohesion)}}"""
-        graft.operators.CacheRegistry.drain()
-        out
-      }
+    answer(GraftServer.key("amendment-coalitions", period), 30000, "coalition analysis") {
+      val (agreement, rebels, cohesion) = cat.analyzer.coalitions(amendIds)
+      utf8(s"""{"party_agreement":${rows(agreement)},""" +
+        s""""rebels":${rows(rebels)},"cohesion":${rows(cohesion)}}""")
     }
   }
 
@@ -461,8 +433,8 @@ class GraftServer(
     val (period, cat) = periodCatalog(q)
     // lang is accepted + keyed for parity with the reference's stats page
     // even though the numeric envelope is language-invariant
-    memo(GraftServer.key("stats", period, langParam(q))) {
-      rows(cat.analyzer.periodStats())
+    answer(GraftServer.key("stats", period, langParam(q)), 15000, "period stats") {
+      utf8(rows(cat.analyzer.periodStats()))
     }
   }
 
@@ -474,16 +446,8 @@ class GraftServer(
   private def topicsRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val lang = langParam(q)
-    memo(GraftServer.key("topics", period, lang)) {
-      val fromLaws = cat.laws.toSeq.map { laws =>
-        val l =
-          if (lang == "en" && laws.columns.contains("topics_en"))
-            laws.withColumn("topics",
-              when(size(col("topics_en")) > 0, col("topics_en"))
-                .otherwise(col("topics")))
-          else laws
-        LawsBrowser.allTopics(l)
-      }
+    answer(GraftServer.key("topics", period, lang), 15000, "topic labels") {
+      val fromLaws = cat.laws.toSeq.map(l => LawsBrowser.allTopics(LawsBrowser.inLang(l, lang)))
       val fromVotes = cat.voteTopics.toSeq.map { t =>
         val c =
           if (lang == "en" && t.columns.contains("topic_en"))
@@ -492,8 +456,8 @@ class GraftServer(
         t.select(c.as("topic"))
       }
       val all = fromLaws ++ fromVotes
-      if (all.isEmpty) "[]"
-      else rows(all.reduce(_.unionAll(_)).distinct().orderBy("topic"))
+      utf8(if (all.isEmpty) "[]"
+        else rows(all.reduce(_.unionAll(_)).distinct().orderBy("topic")))
     }
   }
 
@@ -502,22 +466,41 @@ class GraftServer(
     */
   private def statusesRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    val laws = cat.laws.getOrElse(
-      throw HttpError(404, s"Period $period has no laws table loaded"))
-    memo(GraftServer.key("statuses", period)) {
-      rows(laws.select(col("status")).distinct().orderBy("status"))
+    val laws = lawsOf(period, cat)
+    answer(GraftServer.key("statuses", period), 15000, "status labels") {
+      utf8(rows(laws.select(col("status")).distinct().orderBy("status")))
     }
   }
+
+  private def withOutcome(votes: DataFrame, lang: String): DataFrame =
+    votes.withColumn("outcome_label", Details.outcomeLabel(col("vysledek"), lang))
+
+  /** Laws with `status_label`, the canonical trio localized for en
+    * readers; the raw `status` stays (reference parity + filter
+    * compatibility).
+    */
+  private def withStatus(laws: DataFrame, lang: String): DataFrame =
+    laws.withColumn("status_label", I18n.statusLabel(col("status"), lang))
+
+  private def lawsOf(period: Int, cat: PeriodCatalog): DataFrame =
+    cat.laws.getOrElse(throw HttpError(404, s"Period $period has no laws table loaded"))
+
+  private def billsOf(period: Int, cat: PeriodCatalog): DataFrame =
+    cat.amendmentBills.getOrElse(
+      throw HttpError(404, s"Period $period has no amendment table loaded"))
 
   // ------------------------------------------------------- detail routes
   // Reference pages.py:130 (vote), :174 (law), amendments router — the
   // browse loop's click-through surface. Each is a single-key lookup:
   // 404 on an unknown id, lang-keyed caching, 15 s budget.
 
-  /** Serialize a single-row DataFrame as one JSON object; None = 0 rows. */
-  private def singleObject(df: DataFrame): Option[String] = {
+  /** Serialize a single-row DataFrame as one JSON object, or 404 with
+    * `missing` when it has no rows.
+    */
+  private def singleObject(df: DataFrame, missing: => String): Array[Byte] = {
     val json = rows(df)
-    if (json == "[]") None else Some(json.stripPrefix("[").stripSuffix("]"))
+    if (json == "[]") throw HttpError(404, missing)
+    utf8(json.stripPrefix("[").stripSuffix("]"))
   }
 
   /** GET /api/votes/{id} (`votes_service.py:303-319` via pages.py:130):
@@ -527,25 +510,18 @@ class GraftServer(
   private def voteDetailRoute(q: Map[String, String], id: Long): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val lang = langParam(q)
-    memo(GraftServer.key("vote_detail", period, id, lang)) {
-      withTimeout(15000, "vote detail") {
-        singleObject(cat.analyzer.voteDetailRow(id, lang, cat.voteTopics))
-          .getOrElse(throw HttpError(404, s"Vote $id not found"))
-      }
+    answer(GraftServer.key("vote_detail", period, id, lang), 15000, "vote detail") {
+      singleObject(cat.analyzer.voteDetailRow(id, lang, cat.voteTopics), s"Vote $id not found")
     }
   }
 
   /** GET /api/laws/{ct} (`law_service.py:247-312` via pages.py:174). */
   private def lawDetailRoute(q: Map[String, String], ct: Int): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    val laws = cat.laws.getOrElse(
-      throw HttpError(404, s"Period $period has no laws table loaded"))
+    val laws = lawsOf(period, cat)
     val lang = langParam(q)
-    memo(GraftServer.key("law_detail", period, ct, lang)) {
-      withTimeout(15000, "law detail") {
-        singleObject(Details.lawDetail(laws, cat.amendmentBills, ct, lang))
-          .getOrElse(throw HttpError(404, s"Law $ct not found"))
-      }
+    answer(GraftServer.key("law_detail", period, ct, lang), 15000, "law detail") {
+      singleObject(Details.lawDetail(laws, cat.amendmentBills, ct, lang), s"Law $ct not found")
     }
   }
 
@@ -558,42 +534,31 @@ class GraftServer(
     val facts = cat.amendmentFacts.getOrElse(
       throw HttpError(404, s"Period $period has no amendment facts loaded"))
     val lang = langParam(q)
-    memo(
-        GraftServer.key("amendment_detail", period, schuze, bod, lang)) {
-      withTimeout(15000, "amendment detail") {
-        val grouped = rows(Details.amendmentDetail(facts, schuze, bod))
-        if (grouped == "[]")
-          throw HttpError(404, s"No amendments for $schuze/$bod")
-        val count = facts
-          .filter(col("schuze") === schuze && col("bod") === bod).count()
-        s"""{"schuze":$schuze,"bod":$bod,"amendment_count":$count,""" +
-          s""""amendments":$grouped}"""
-      }
+    answer(GraftServer.key("amendment_detail", period, schuze, bod, lang), 15000,
+        "amendment detail") {
+      val grouped = rows(Details.amendmentDetail(facts, schuze, bod))
+      if (grouped == "[]")
+        throw HttpError(404, s"No amendments for $schuze/$bod")
+      val count = facts
+        .filter(col("schuze") === schuze && col("bod") === bod).count()
+      utf8(s"""{"schuze":$schuze,"bod":$bod,"amendment_count":$count,""" +
+        s""""amendments":$grouped}""")
     }
   }
 
   /** GET /api/amendments/{schuze}/{bod}/mp-votes?vote={id_hlasovani}
     * (`amendment_service.py:275-339`): vote header + party breakdown +
-    * per-MP labels for one amendment vote.
+    * per-MP labels for one amendment vote, one row narrowed from the
+    * Analyzer's resident vote-detail base.
     */
   private def amendmentMpVotesRoute(q: Map[String, String],
       schuze: Int, bod: Int): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val id = q.get("vote").flatMap(_.toLongOption)
       .getOrElse(throw HttpError(422, "Missing or invalid 'vote' param"))
-    memo(
-        GraftServer.key("amendment_mp", period, schuze, bod, id)) {
-      withTimeout(15000, "amendment MP votes") {
-        val d = cat.analyzer.data
-        val header = singleObject(d.votes
-            .filter(col("id_hlasovani") === id)
-            .select(col("id_hlasovani"), col("pro"), col("proti"),
-              col("zdrzel"), col("nehlasoval"), col("vysledek")))
-          .getOrElse(throw HttpError(404, s"Vote $id not found"))
-        s"""{"vote":$header,""" +
-          s""""party_breakdown":${rows(cat.analyzer.voteDetail(id))},""" +
-          s""""mp_votes":${rows(Details.amendmentMpList(d.mpVotes, d.mpInfo, id))}}"""
-      }
+    answer(GraftServer.key("amendment_mp", period, schuze, bod, id), 15000,
+        "amendment MP votes") {
+      singleObject(cat.analyzer.amendmentVoteRow(id), s"Vote $id not found")
     }
   }
 
@@ -618,61 +583,39 @@ class GraftServer(
       val lang = langParam(q)
       def t(cs: String, en: String) = if (lang == "en") en else cs
       val d = cat.analyzer.data
+      // Every key input is validated before any key is built, whether
+      // the route reads it or not: an oversized value 422s instead of
+      // minting one cache entry per arbitrary multi-KB garbage value
+      // (entry-cap thrash), and the numeric params must parse in range.
+      // "outcome" is capped at the tightest read any page performs.
+      Seq("page", "top").foreach(strParam(q, _, 10))
+      val page = intParam(q, "page", 1, 1, 1000)
+      val top = Option.when(q.get("top").exists(_.nonEmpty))(
+        intParam(q, "top", 0, 1, Analyzer.MaxTop))
+      val search = strParam(q, "search", 200)
+      val status = strParam(q, "status", 200)
+      val topic = strParam(q, "topic", 200)
+      val outcome = strParam(q, "outcome", 10)
       // rendered pages memoize like the JSON routes (and drop with the
-      // period on refresh); 404s throw before the cache stores anything.
-      // Key inputs are VALIDATED FIRST: oversized values 422 before the
-      // key is computed, so a client cannot mint one cache entry per
-      // arbitrary multi-KB garbage value (entry-cap thrash), and the
-      // numeric params must parse in range.
-      // "outcome" matches the tightest read any page/fragment body
-      // performs (10, the fragments/votes key below) — a looser cap here
-      // would let an 11+-char value pass "validated first" and then 422
-      // inside key computation, making the invariant honest only by
-      // accident
-      Seq("page" -> 10, "top" -> 10, "search" -> 200, "status" -> 200,
-        "topic" -> 200, "outcome" -> 10)
-        .foreach { case (n, cap) => strParam(q, n, cap) }
-      if (q.contains("page")) intParam(q, "page", 1, 1, 1000)
-      if (q.contains("top")) intParam(q, "top", 30, 1, Analyzer.MaxTop)
-      // Each route's key holds ONLY the params that route consumes, and
-      // each is NORMALIZED through the same intParam/strParam reads the
-      // route body performs — so `page=01` and `page=1` (or an ignored
-      // `search=` on a plain page) share one entry instead of churning
-      // the cache's entry cap with identical rendered pages.
-      val keyed: Seq[String] = route match {
-        case "votes" | "laws" | "amendments" =>
-          Seq(intParam(q, "page", 1, 1, 1000).toString)
-        case "fragments/votes" =>
-          Seq(intParam(q, "page", 1, 1, 1000).toString,
-            strParam(q, "search", 200), strParam(q, "outcome", 10))
-        case "fragments/laws" =>
-          Seq(intParam(q, "page", 1, 1, 1000).toString,
-            strParam(q, "search", 200), strParam(q, "status", 200),
-            strParam(q, "topic", 200))
-        case "fragments/amendments" =>
-          Seq(intParam(q, "page", 1, 1, 1000).toString,
-            strParam(q, "search", 200))
-        case "fragments/loyalty" | "fragments/attendance" =>
-          Seq(intParam(q, "top", 30, 1, Analyzer.MaxTop).toString)
-        case "fragments/similarity" =>
-          Seq(intParam(q, "top", 20, 1, Analyzer.MaxTop).toString)
-        // index, vote-detail (id is in the route), and the fixed-top
-        // chart pages take no query params
-        case _ => Nil
-      }
-      val html = memo(GraftServer.key(
-          "pages", period, (Seq(route, lang) ++ keyed): _*)) { route match {
-        case "" =>
+      // period on refresh); each key holds only the params its route
+      // reads, in their parsed form, so `page=01` and `page=1` (or an
+      // ignored `search=` on a plain page) share one entry
+      def html(parts: Any*)(body: => String): Array[Byte] =
+        answer(GraftServer.key("pages", period, (Seq(route, lang) ++ parts): _*), 15000,
+          s"page /$route")(utf8(body))
+      def opt(s: String) = Some(s).filter(_.nonEmpty)
+      val body = route match {
+        case "" => html() {
           PageRender.page(t("Přehled období", "Period overview"), lang, period,
             PageRender.table(cat.analyzer.periodStats(), lang))
-        case "votes" =>
-          val pr = cat.analyzer.listVotesPaged(page = intParam(q, "page", 1, 1, 1000))
+        }
+        case "votes" => html(page) {
+          val pr = cat.analyzer.listVotesPaged(page = page)
           PageRender.page(t("Hlasování", "Votes"), lang, period,
-            PageRender.table(pr.rows
-              .withColumn("outcome_label",
-                Details.outcomeLabel(col("vysledek"), lang)), lang) +
+            PageRender.table(withOutcome(pr.rows, lang), lang) +
               s"<p>${t("strana", "page")} ${pr.page}/${pr.totalPages}</p>")
-        case GraftServer.VoteDetailPath(idStr) =>
+        }
+        case GraftServer.VoteDetailPath(idStr) => html() {
           val id = idStr.toLong
           val detail = cat.analyzer.voteDetailRow(id, lang, cat.voteTopics)
           if (detail.isEmpty) throw HttpError(404, s"Vote $id not found")
@@ -682,90 +625,78 @@ class GraftServer(
               PageRender.table(detail.select(inline(col("party_breakdown"))), lang) +
               s"<h2>${t("Poslanci", "MPs")}</h2>" +
               PageRender.table(detail.select(inline(col("mp_votes"))), lang))
+        }
         case "laws" =>
-          val laws = cat.laws.getOrElse(
-            throw HttpError(404, s"Period $period has no laws table loaded"))
-          val page = intParam(q, "page", 1, 1, 1000)
-          val pr = LawsBrowser.listLawsPaged(laws, None, None, None, page)
-          PageRender.page(t("Zákony", "Laws"), lang, period,
-            PageRender.table(pr.rows
-              .withColumn("status_label",
-                I18n.statusLabel(col("status"), lang)), lang))
+          val laws = lawsOf(period, cat)
+          html(page) {
+            val pr = LawsBrowser.listLawsPaged(LawsBrowser.inLang(laws, lang), page = page)
+            PageRender.page(t("Zákony", "Laws"), lang, period,
+              PageRender.table(withStatus(pr.rows, lang), lang))
+          }
         case "amendments" =>
-          val bills = cat.amendmentBills.getOrElse(
-            throw HttpError(404, s"Period $period has no amendment table loaded"))
-          val page = intParam(q, "page", 1, 1, 1000)
-          val pr = Amendments.listBillsPaged(bills, d.tiskLookup, None, page)
-          PageRender.page(t("Pozměňovací návrhy", "Amendments"), lang, period,
-            PageRender.table(pr.rows, lang))
-        case "loyalty" =>
+          val bills = billsOf(period, cat)
+          html(page) {
+            val pr = Amendments.listBillsPaged(bills, d.tiskLookup, None, page)
+            PageRender.page(t("Pozměňovací návrhy", "Amendments"), lang, period,
+              PageRender.table(pr.rows, lang))
+          }
+        case "loyalty" => html() {
           PageRender.page(t("Loajalita", "Loyalty"), lang, period,
             s"""<img src="/api/loyalty.png?period=$period" alt="loyalty">""" +
               PageRender.table(cat.analyzer.loyalty(30), lang))
-        case "attendance" =>
+        }
+        case "attendance" => html() {
           PageRender.page(t("Účast", "Attendance"), lang, period,
             s"""<img src="/api/attendance.png?period=$period" alt="attendance">""" +
               PageRender.table(cat.analyzer.attendance(30), lang))
-        case "similarity" =>
+        }
+        case "similarity" => html() {
           PageRender.page(t("Podobnost", "Similarity"), lang, period,
             s"""<img src="/api/similarity.png?period=$period" alt="pca">""" +
               PageRender.table(cat.analyzer.crossPartySimilarity(20), lang))
+        }
 
         // HTMX-style partials (reference templates/partials/*_list.html +
         // the HTML-fragment responses of routes/voting.py etc.): the
         // listing region alone — found line, localized table, prev/next
         // carrying the filters — for clients that swap only the results
-        case "fragments/votes" =>
-          val page = intParam(q, "page", 1, 1, 1000)
-          val search = strParam(q, "search", 200)
-          val outcome = strParam(q, "outcome", 10)
-          val pr = cat.analyzer.listVotesPaged(Some(search).filter(_.nonEmpty),
-            Some(outcome).filter(_.nonEmpty), None, page)
-          PageRender.listFragment(
-            pr.rows.withColumn("outcome_label",
-              Details.outcomeLabel(col("vysledek"), lang)),
+        case "fragments/votes" => html(page, search, outcome) {
+          val pr = cat.analyzer.listVotesPaged(opt(search), opt(outcome), None, page)
+          PageRender.listFragment(withOutcome(pr.rows, lang),
             pr.total, pr.page, pr.totalPages, lang, "/fragments/votes",
-            Map("period" -> period.toString, "search" -> search,
-              "outcome" -> outcome))
+            Map("period" -> period.toString, "search" -> search, "outcome" -> outcome))
+        }
         case "fragments/laws" =>
-          val laws = cat.laws.getOrElse(
-            throw HttpError(404, s"Period $period has no laws table loaded"))
-          val page = intParam(q, "page", 1, 1, 1000)
-          val search = strParam(q, "search", 200)
-          val status = strParam(q, "status", 200)
-          val topic = strParam(q, "topic", 200)
-          val pr = LawsBrowser.listLawsPaged(laws,
-            Some(search).filter(_.nonEmpty), Some(status).filter(_.nonEmpty),
-            Some(topic).filter(_.nonEmpty), page)
-          PageRender.listFragment(
-            pr.rows.withColumn("status_label",
-              I18n.statusLabel(col("status"), lang)),
-            pr.total, pr.page, pr.totalPages, lang, "/fragments/laws",
-            Map("period" -> period.toString, "search" -> search,
-              "status" -> status, "topic" -> topic))
+          val laws = lawsOf(period, cat)
+          html(page, search, status, topic) {
+            val pr = LawsBrowser.listLawsPaged(LawsBrowser.inLang(laws, lang),
+              opt(search), opt(status), opt(topic), page)
+            PageRender.listFragment(withStatus(pr.rows, lang),
+              pr.total, pr.page, pr.totalPages, lang, "/fragments/laws",
+              Map("period" -> period.toString, "search" -> search,
+                "status" -> status, "topic" -> topic))
+          }
         case "fragments/amendments" =>
-          val bills = cat.amendmentBills.getOrElse(
-            throw HttpError(404, s"Period $period has no amendment table loaded"))
-          val page = intParam(q, "page", 1, 1, 1000)
-          val search = strParam(q, "search", 200)
-          val pr = Amendments.listBillsPaged(bills, d.tiskLookup,
-            Some(search).filter(_.nonEmpty), page)
-          PageRender.listFragment(pr.rows, pr.total, pr.page, pr.totalPages,
-            lang, "/fragments/amendments",
-            Map("period" -> period.toString, "search" -> search))
+          val bills = billsOf(period, cat)
+          html(page, search) {
+            val pr = Amendments.listBillsPaged(bills, d.tiskLookup, opt(search), page)
+            PageRender.listFragment(pr.rows, pr.total, pr.page, pr.totalPages,
+              lang, "/fragments/amendments",
+              Map("period" -> period.toString, "search" -> search))
+          }
         case "fragments/loyalty" =>
-          PageRender.table(cat.analyzer.loyalty(
-            intParam(q, "top", 30, 1, Analyzer.MaxTop)), lang)
+          val n = top.getOrElse(30)
+          html(n)(PageRender.table(cat.analyzer.loyalty(n), lang))
         case "fragments/attendance" =>
-          PageRender.table(cat.analyzer.attendance(
-            intParam(q, "top", 30, 1, Analyzer.MaxTop)), lang)
+          val n = top.getOrElse(30)
+          html(n)(PageRender.table(cat.analyzer.attendance(n), lang))
         case "fragments/similarity" =>
-          PageRender.table(cat.analyzer.crossPartySimilarity(
-            intParam(q, "top", 20, 1, Analyzer.MaxTop)), lang)
+          val n = top.getOrElse(20)
+          html(n)(PageRender.table(cat.analyzer.crossPartySimilarity(n), lang))
 
         case other => throw HttpError(404, s"No page /$other")
-      } }
-      sendBytes(ex, 200, html, "text/html; charset=utf-8")
+      }
+      sendBytes(ex, 200, body, "text/html; charset=utf-8")
     } catch {
       case HttpError(status, detail) =>
         send(ex, status, s"""{"detail":${jstr(detail)}}""")
@@ -823,85 +754,48 @@ class GraftServer(
     * through the S9 ingestion boundary; a missing text is a 200 with
     * `available: false`, like the reference's notice partial.
     */
-  private def tiskTextRoute(q: Map[String, String]): String = {
+  private def tiskTextRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val ct = intParam(q, "ct", 0, 0, 999999)
     cat.tiskTexts match {
-      case None => s"""{"available":false,"detail":"No text service loaded"}"""
+      case None => utf8(s"""{"available":false,"detail":"No text service loaded"}""")
+      case Some(svc) if !svc.hasText(period, ct) =>
+        utf8(s"""{"available":false,"detail":"No text for print $ct"}""")
       case Some(svc) =>
-        if (!svc.hasText(period, ct))
-          s"""{"available":false,"detail":"No text for print $ct"}"""
-        else {
+        answer(GraftServer.key("tisk_text", period, ct), 15000, "print text") {
           val text = svc.texts(cat.analyzer.data.votes.sparkSession, period)
             .filter(col("ct") === ct).select("text")
             .collect().headOption.map(_.getString(0)).getOrElse("")
-          s"""{"available":true,"ct":$ct,"text":${jstr(text)}}"""
+          utf8(s"""{"available":true,"ct":$ct,"text":${jstr(text)}}""")
         }
     }
   }
 
-  // chart PNG endpoints (`routes/charts.py:39-149`): same data prep as
-  // the data endpoints, rasterized by ChartRender (JDK-only), memoized
-  // separately from the JSON cache
-  private val pngCache = new AnalysisCache[Array[Byte]]()
-
-  private def pngRoute(route: String, q: Map[String, String]): Array[Byte] =
-    route match {
-      case "loyalty.png" =>
-        val (period, cat) = periodCatalog(q)
-        val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-        pngCache.getOrCompute(GraftServer.key("png_loyalty", period, top)) {
-          withTimeout(20000, "loyalty chart") {
-            val rows = cat.analyzer.loyalty(top)
-              .select(chartLabel.as("label"), col("rebellion_pct").as("value"))
-              .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-            ChartRender.barChart("Rebellion rate by MP", "rebellion %", rows)
-          }
-        }
-      case "attendance.png" =>
-        val (period, cat) = periodCatalog(q)
-        val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-        val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
-        val party = strParam(q, "party", 200)
-        val field = AttendanceChartField.getOrElse(sort, "attendance_pct")
-        pngCache.getOrCompute(GraftServer.key("png_attendance", period, top, sort, party)) {
-          withTimeout(20000, "attendance chart") {
-            val rows = cat.analyzer
-              .attendance(top, sort, Some(party).filter(_.nonEmpty))
-              .select(chartLabel.as("label"),
-                col(field).cast("double").as("value"))
-              .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-            ChartRender.barChart(s"Attendance ($sort)", field, rows)
-          }
-        }
-      case _ => // similarity.png
-        val (period, cat) = periodCatalog(q)
-        pngCache.getOrCompute(GraftServer.key("png_similarity", period)) {
-          withTimeout(30000, "similarity chart") {
-            val pts = cat.analyzer.pcaCoords()
-              .select(col("party"), col("x"), col("y"))
-              .collect()
-              .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
-            ChartRender.scatterChart("Voting-pattern PCA", "PC1", "PC2", pts)
-          }
-        }
-    }
-
-  // chart DATA endpoints (`routes/charts.py:39-149` minus the raster):
-  // same cache keys and row prep as the reference's figures
+  // chart endpoints (`routes/charts.py:39-149`): each bar chart's
+  // label/value rows are built once, then served as JSON data
+  // (`/api/charts/...`) or rasterized by ChartRender (`/api/*.png`,
+  // JDK-only) under their own keys
 
   private def chartLabel: org.apache.spark.sql.Column =
     concat(col("jmeno"), lit(" "), col("prijmeni"),
       lit(" ("), coalesce(col("party"), lit("?")), lit(")"))
 
-  private def chartLoyaltyRoute(q: Map[String, String]): Array[Byte] = {
+  /** A bar chart's rows as JSON, or its PNG. */
+  private def chartBody(chart: DataFrame, png: Boolean, title: String,
+      axis: String): Array[Byte] =
+    if (!png) utf8(rows(chart))
+    else ChartRender.barChart(title, axis,
+      chart.select(col("label"), col("value").cast("double")).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq)
+
+  private def loyaltyChartRoute(q: Map[String, String], png: Boolean): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
-    memo(GraftServer.key("chart_loyalty", period, top)) {
-      withTimeout(20000, "loyalty chart") {
-        rows(cat.analyzer.loyalty(top)
-          .select(chartLabel.as("label"), col("rebellion_pct").as("value")))
-      }
+    answer(GraftServer.key(if (png) "png_loyalty" else "chart_loyalty", period, top), 20000,
+        "loyalty chart") {
+      chartBody(cat.analyzer.loyalty(top)
+          .select(chartLabel.as("label"), col("rebellion_pct").as("value")),
+        png, "Rebellion rate by MP", "rebellion %")
     }
   }
 
@@ -913,27 +807,28 @@ class GraftServer(
     "most_passive" -> "passive", "most_absent" -> "absent",
     "most_yes" -> "yes_votes", "most_no" -> "no_votes")
 
-  private def chartAttendanceRoute(q: Map[String, String]): Array[Byte] = {
+  private def attendanceChartRoute(q: Map[String, String], png: Boolean): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
     val top = intParam(q, "top", 20, 1, Analyzer.MaxTop)
     val sort = strParam(q, "sort", 20) match { case "" => "worst"; case s => s }
     val party = strParam(q, "party", 200)
     val field = AttendanceChartField.getOrElse(sort, "attendance_pct")
-    memo(GraftServer.key("chart_attendance", period, top, sort, party)) {
-      withTimeout(20000, "attendance chart") {
-        rows(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty))
-          .select(chartLabel.as("label"), col(field).as("value")))
-      }
+    answer(GraftServer.key(if (png) "png_attendance" else "chart_attendance",
+        period, top, sort, party), 20000, "attendance chart") {
+      chartBody(cat.analyzer.attendance(top, sort, Some(party).filter(_.nonEmpty))
+          .select(chartLabel.as("label"), col(field).as("value")),
+        png, s"Attendance ($sort)", field)
     }
   }
 
-  private def chartSimilarityRoute(q: Map[String, String]): Array[Byte] = {
+  private def similarityPngRoute(q: Map[String, String]): Array[Byte] = {
     val (period, cat) = periodCatalog(q)
-    memo(GraftServer.key("chart_similarity", period)) {
-      withTimeout(30000, "similarity chart") {
-        // pcaCoords already serves the chart shape (mp_name, party, x, y)
-        rows(cat.analyzer.pcaCoords())
-      }
+    answer(GraftServer.key("png_similarity", period), 30000, "similarity chart") {
+      val pts = cat.analyzer.pcaCoords()
+        .select(col("party"), col("x"), col("y"))
+        .collect()
+        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+      ChartRender.scatterChart("Voting-pattern PCA", "PC1", "PC2", pts)
     }
   }
 }
@@ -966,14 +861,6 @@ object GraftServer {
     "amendment-coalitions" -> 15, "stats" -> 120, "health" -> 120,
     "charts" -> 30, "pages" -> 60)
 
-  /** Every cache-key prefix a period's results live under. */
-  val KeyPrefixes: Seq[String] = Seq(
-    "loyalty", "attendance", "similarity", "similarity_pca", "votes",
-    "laws", "amendments", "amendment-coalitions", "stats", "topics",
-    "statuses", "pages",
-    "vote_detail", "law_detail", "amendment_detail", "amendment_mp",
-    "chart_loyalty", "chart_attendance", "chart_similarity")
-
   /** Detail-page path shapes (digit caps keep ids inside Long/Int). */
   private[serving] val VoteDetailPath = "votes/([0-9]{1,18})".r
   private[serving] val LawDetailPath = "laws/([0-9]{1,9})".r
@@ -981,20 +868,23 @@ object GraftServer {
   private[serving] val AmendMpVotesPath =
     "amendments/([0-9]{1,9})/([0-9]{1,9})/mp-votes".r
 
-  /** Rendered-PNG cache prefixes (a separate byte-valued cache). */
-  val PngKeyPrefixes: Seq[String] = Seq(
-    "png_loyalty", "png_attendance", "png_similarity")
-
   /** Cache keys join user params with `:` — but `:` is legal inside the
     * params themselves (search strings up to 200 chars), so a raw join is
     * not injective: `search=a:b&outcome=c` and `search=a&outcome=b&topic=c`
     * would collide on `votes:1:a:b:c:1` and one query's cached payload
     * would be served for the other. Percent-escaping `%` and `:` in each
-    * segment makes the join injective while keeping the `prefix:period:`
-    * shape that [[GraftServer.invalidatePeriod]] scans (the period is an
-    * int and never escaped).
+    * segment makes the join injective. A prefix never contains `:` and
+    * the period is an int, so the period is always the second field
+    * ([[periodOf]]).
     */
   def key(prefix: String, period: Int, parts: Any*): String =
     s"$prefix:$period:" + parts.map(
       _.toString.replace("%", "%25").replace(":", "%3A")).mkString(":")
+
+  /** The period field of a [[key]]. */
+  def periodOf(key: String): Option[Int] =
+    key.split(":", 3) match {
+      case Array(_, period, _*) => period.toIntOption
+      case _ => None
+    }
 }

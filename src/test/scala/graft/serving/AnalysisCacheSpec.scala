@@ -48,6 +48,17 @@ class AnalysisCacheSpec extends AnyFunSuite {
     assert(cache.get("attendance:10:c").contains(3))
   }
 
+  test("predicate invalidation drops exactly the accepted keys, and the " +
+      "period field of a server key reads back") {
+    val cache = new AnalysisCache[Int]()
+    val keys = Seq(GraftServer.key("loyalty", 1, 30, ""), GraftServer.key("pages", 10, "", "cs"),
+      GraftServer.key("votes", 1, "a:1", "", "", 1, "cs"), GraftServer.key("similarity_pca", 2))
+    keys.zipWithIndex.foreach { case (k, i) => cache.getOrCompute(k)(i) }
+    assert(keys.map(GraftServer.periodOf) == Seq(Some(1), Some(10), Some(1), Some(2)))
+    assert(cache.invalidateIf(GraftServer.periodOf(_).contains(1)) == 2)
+    assert(cache.keys == Set(keys(1), keys(3)))
+  }
+
   /** Runs `n` threads that start together on `body`; their outcomes. */
   private def together[A](n: Int)(body: => A): Seq[Either[Throwable, A]] = {
     val start = new java.util.concurrent.CyclicBarrier(n)

@@ -246,6 +246,28 @@ class GraftServerSpec extends SparkSpec {
     assert(r.body().contains("\"vote_label\":\"Absent\""))
     assert(get("/api/amendments/1/2/mp-votes?period=1&vote=999").statusCode() == 404)
     assert(get("/api/amendments/1/2/mp-votes?period=1").statusCode() == 422)
+    // the body is the three-query formulation's: the header from the votes
+    // table, the breakdown, and the MP list joined and sorted by name
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val an = fixtureCatalog().analyzer
+    val d = an.data
+    def threeQueries(id: Long): String = {
+      val header = server.rows(d.votes.filter(col("id_hlasovani") === id)
+        .select("id_hlasovani", "pro", "proti", "zdrzel", "nehlasoval", "vysledek"))
+      val mps = d.mpVotes.filter(col("id_hlasovani") === id)
+        .join(broadcast(d.mpInfo), Seq("id_poslanec"), "inner")
+        .select("party", "prijmeni", "jmeno", "vysledek")
+        .orderBy("party", "prijmeni", "jmeno")
+        .withColumn("vote_code", col("vysledek"))
+        .withColumn("vote_label", graft.psp.Details.amendmentVoteLabel(col("vysledek")))
+      s"""{"vote":${header.stripPrefix("[").stripSuffix("]")},""" +
+        s""""party_breakdown":${server.rows(an.voteDetail(id))},""" +
+        s""""mp_votes":${server.rows(mps)}}"""
+    }
+    for (id <- Seq(1L, 2L))
+      assert(get(s"/api/amendments/1/2/mp-votes?period=1&vote=$id").body() ==
+        threeQueries(id), s"vote $id")
+    assert(get("/api/amendments/1/2/mp-votes?period=1&vote=6").statusCode() == 404)
   }
 
   test("topics route unions law and vote topic labels, lang-aware " +
@@ -361,6 +383,15 @@ class GraftServerSpec extends SparkSpec {
     // value 422s instead of minting a fresh cache entry per garbage value
     assert(get("/?period=1&search=" + "x" * 300).statusCode() == 422)
     assert(get("/fragments/loyalty?period=1&top=notanum").statusCode() == 422)
+  }
+
+  test("the laws page and fragment browse English topic labels under lang=en") {
+    val en = get("/fragments/laws?period=1&topic=taxation&lang=en")
+    assert(en.statusCode() == 200, en.body())
+    assert(en.body().contains("1 found"), en.body())
+    assert(en.body().contains("Zákon o daních"))
+    assert(get("/fragments/laws?period=1&topic=tax&lang=en").body().contains("0 found"))
+    assert(get("/laws?period=1&lang=en").body().contains("taxation"))
   }
 
   test("statuses route lists the laws filter's distinct status values") {
@@ -551,6 +582,102 @@ class GraftServerSpec extends SparkSpec {
       GraftServerSpec.Stall.set(false)
       srv.stop()
     }
+  }
+
+  test("a page's 504 cancels its base build: Spark goes idle and the " +
+      "next call answers 200") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val stall = udf { (v: String) =>
+      while (GraftServerSpec.Stall.get) Thread.sleep(10)
+      v
+    }.asNondeterministic()
+    val cat = fixtureCatalog()
+    val d = cat.analyzer.data
+    val stalling = cat.copy(analyzer = new Analyzer(d.copy(
+      mpVotes = d.mpVotes.repartition(4).withColumn("vysledek", stall(col("vysledek"))))))
+    val srv = new GraftServer(Map(1 -> stalling),
+      timeoutMillis = budget => if (GraftServerSpec.Stall.get) 1000 else budget).start()
+    GraftServerSpec.Stall.set(true)
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      assert(get("/loyalty?period=1", at).statusCode() == 504)
+      // time for the call's planning to reach Spark; then Spark must go
+      // idle while the stall still holds: only the cancel ends its tasks
+      Thread.sleep(2000)
+      val tracker = spark.sparkContext.statusTracker
+      def busy = tracker.getActiveJobIds.nonEmpty ||
+        tracker.getExecutorInfos.exists(_.numRunningTasks > 0)
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (busy && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(!busy, "the page's Spark work outlived its 504")
+      GraftServerSpec.Stall.set(false)
+      val r = get("/api/loyalty?period=1", at)
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body() == srv.rows(new Analyzer(d).loyalty(30)))
+    } finally {
+      GraftServerSpec.Stall.set(false)
+      srv.stop()
+    }
+  }
+
+  test("every route's cache keys drop with their period, and only theirs") {
+    // one catalog served as two periods: every key of period 1 must go,
+    // every key of period 2 must stay
+    val cat = fixtureCatalog().copy(tiskTexts = Some(
+      new graft.sources.ExternalIngestion.FixtureTexts(
+        Map((1, 100) -> "Text 1", (2, 100) -> "Text 2"))))
+    val srv = new GraftServer(Map(1 -> cat, 2 -> cat)).start()
+    val paths = Seq(
+      "/api/loyalty", "/api/attendance", "/api/similarity", "/api/pca", "/api/votes",
+      "/api/laws", "/api/amendments", "/api/amendments/1/2",
+      "/api/amendments/1/2/mp-votes?vote=2", "/api/votes/1", "/api/laws/100",
+      "/api/amendment-coalitions", "/api/stats", "/api/topics", "/api/statuses",
+      "/api/tisk-text?ct=100", "/api/charts/loyalty", "/api/charts/attendance",
+      "/api/charts/similarity", "/api/loyalty.png", "/api/attendance.png",
+      "/api/similarity.png",
+      "/", "/votes", "/votes/1", "/laws", "/amendments", "/loyalty", "/attendance",
+      "/similarity", "/fragments/votes", "/fragments/laws", "/fragments/amendments",
+      "/fragments/loyalty", "/fragments/attendance", "/fragments/similarity")
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      def requestAll(period: Int): Set[String] = {
+        val before = srv.cache.keys
+        for (p <- paths) {
+          val r = get(p + (if (p.contains("?")) "&" else "?") + s"period=$period", at)
+          assert(r.statusCode() == 200, s"$p period $period: ${r.body()}")
+        }
+        srv.cache.keys -- before
+      }
+      val first = requestAll(1)
+      val second = requestAll(2)
+      // /api/pca and /api/charts/similarity share one entry
+      assert(first.size == paths.size - 1, first)
+      assert(second.size == first.size, second)
+      assert(srv.invalidatePeriod(1) == first.size)
+      assert(srv.cache.keys == second)
+    } finally srv.stop()
+  }
+
+  test("PCA and coalition routes leave nothing in CacheRegistry and no " +
+      "new RDD persisted at MEMORY_ONLY") {
+    import org.apache.spark.storage.StorageLevel
+    val sc = spark.sparkContext
+    def memoryOnly = sc.getPersistentRDDs.collect {
+      case (id, rdd) if rdd.getStorageLevel == StorageLevel.MEMORY_ONLY => id
+    }.toSet
+    val registered = graft.operators.CacheRegistry.size
+    val before = memoryOnly
+    val srv = new GraftServer(Map(1 -> fixtureCatalog())).start()
+    try {
+      val at = s"http://127.0.0.1:${srv.boundPort}"
+      // checked after each call: a registry drain in the second would
+      // hide what the first left behind
+      for (route <- Seq("pca", "amendment-coalitions")) {
+        assert(get(s"/api/$route?period=1", at).statusCode() == 200)
+        assert(graft.operators.CacheRegistry.size == registered, route)
+        assert((memoryOnly -- before).isEmpty, s"$route: ${sc.getPersistentRDDs}")
+      }
+    } finally srv.stop()
   }
 
   test("PCA is computed once per Analyzer: after /api/pca, the PNG and " +
