@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
   * `/api/amendments/{schuze}/{bod}` routes (reference
   * `services/votes_service.py:303-319`, `services/law_service.py:247-312`,
   * `services/amendment_service.py:168-246`). Each is a bounded
-  * single-key lookup: a pushed-down equality filter on the fact table
-  * plus broadcast joins against the small dimensions, so a detail page
-  * costs one partition-pruned scan regardless of corpus size. A vote's
-  * detail is also served whole from a resident [[voteDetailBase]]
-  * narrowed by [[voteDetailNarrow]]: one filter, no per-request join.
+  * single-key lookup: an equality filter on the fact table plus
+  * broadcast joins against the small dimensions. The served lookups
+  * compare their key as text ([[keyIs]]), so every key reuses one
+  * compiled plan; their tables are resident or in memory, where there is
+  * no scan to push a filter into. A vote's detail is served whole from a
+  * resident [[voteDetailBase]] narrowed by [[voteDetailNarrow]]: one
+  * filter, no per-request join.
   */
 object Details {
 
@@ -155,14 +157,17 @@ object Details {
       one.columns.filter(Set("party_breakdown", "mp_votes")).map(col): _*)
   }
 
-  /** Rows of `base` for one vote. The id is compared as text: a long
-    * literal is inlined into the generated code, so every id would
-    * compile new classes, while a string literal is passed by reference
-    * and every id reuses one compiled plan. For resident bases only: the
+  /** `c` equals the key `v`, compared as text: a numeric literal is
+    * inlined into the generated code, so every key would compile new
+    * classes, while a string literal is passed by reference and every key
+    * reuses one compiled plan. For resident or in-memory tables only: the
     * cast defeats a file scan's filter pushdown.
     */
+  private def keyIs(c: String, v: Any): Column = col(c).cast("string") === v.toString
+
+  /** Rows of `base` for one vote ([[keyIs]]). */
   private[psp] def ofVote(base: DataFrame, voteId: Long): DataFrame =
-    base.filter(col("id_hlasovani").cast("string") === voteId.toString)
+    base.filter(keyIs("id_hlasovani", voteId))
 
   /** One vote's detail from [[voteDetailBase]] as a single row of `info`
     * (a struct of [[voteInfo]]'s columns), `party_breakdown` and
@@ -238,7 +243,7 @@ object Details {
       if (laws.columns.contains("summary"))
         langCol(laws, "summary", "summary_en", lang)
       else lit("")
-    val law = LawsBrowser.inLang(LawsBrowser.dedupeLaws(laws).filter(col("ct") === ct), lang)
+    val law = LawsBrowser.inLang(LawsBrowser.dedupeLaws(laws).filter(keyIs("ct", ct)), lang)
       .withColumn("summary", summaryCol)
       .drop("topics_en", "summary_en")
     val entries = bills match {
@@ -246,7 +251,7 @@ object Details {
         // bill agenda entries for this print (`amendment_entries` in the
         // reference's dict); ct arrives as string in the scraped fact
         // table, as int here — compare canonically
-        b.filter(col("ct").cast("string") === lit(ct.toString))
+        b.filter(keyIs("ct", ct))
           .groupBy(col("ct").cast("string").as("__ct"))
           .agg(sort_array(collect_list(struct(col("schuze"), col("bod"))))
             .as("amendment_entries"))
@@ -271,7 +276,12 @@ object Details {
     * order. 0 rows = unknown (schuze, bod).
     */
   def amendmentDetail(facts: DataFrame, schuze: Int, bod: Int): DataFrame =
-    Amendments.groupRevotes(
-        facts.filter(col("schuze") === schuze && col("bod") === bod))
+    Amendments.groupRevotes(ofAgendaItem(facts, schuze, bod))
       .orderBy(col("vote_number").asc)
+
+  /** The fact rows of one agenda item (schuze, bod), keys compared as
+    * text ([[keyIs]]).
+    */
+  def ofAgendaItem(facts: DataFrame, schuze: Int, bod: Int): DataFrame =
+    facts.filter(keyIs("schuze", schuze) && keyIs("bod", bod))
 }

@@ -31,8 +31,8 @@ case class PeriodCatalog(
   * `routes/amendments.py`, `routes/charts.py`, `routes/health.py`)
   * re-expressed over the JDK's built-in `com.sun.net.httpserver` (this
   * build adds no third-party dependencies). Differences, documented:
-  * responses are JSON rows (the engine's native shape via
-  * `Dataset.toJSON`) instead of Jinja2 HTMX partials; chart endpoints
+  * responses are JSON rows (the engine's native shape via `to_json`)
+  * instead of Jinja2 HTMX partials; chart endpoints
   * serve both chart-shaped DATA (`/api/charts/...`) and rendered PNGs
   * (`/api/{loyalty,attendance,similarity}.png` via [[ChartRender]] —
   * the JDK raster stack, matching the reference's seaborn endpoints in
@@ -50,9 +50,14 @@ case class PeriodCatalog(
   *  - compute timeouts (`middleware.run_with_timeout`) → 504 on expiry:
   *    30 s similarity/PCA/coalitions, 20 s charts, 15 s every other route
   *    that runs Spark
-  *  - a data refresh clears the whole cache (`data_reader.py:444`);
-  *    [[invalidatePeriod]] covers the amendment pipeline's prefix
-  *    invalidation (`data_reader.py:468-469`)
+  *  - a data refresh drops the refreshed period's results
+  *    (`data_reader.py:444,468-469`): [[refreshPeriod]] calls
+  *    [[invalidatePeriod]], which drops the keys whose period field is
+  *    that period
+  *
+  * Every accepted connection has TCP_NODELAY set
+  * (`GraftServer.enableNoDelay`), so a response leaves as soon as it
+  * is written instead of waiting out the client's delayed ACK.
   */
 class GraftServer(
     periods: Map[Int, PeriodCatalog],
@@ -69,7 +74,10 @@ class GraftServer(
   // period's tables wholesale (reference `data_reader.py` reload)
   @volatile private var livePeriods: Map[Int, PeriodCatalog] = periods
 
-  private val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val http = {
+    GraftServer.enableNoDelay()
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
   private val pool = Executors.newFixedThreadPool(8)
   private val computePool = Executors.newCachedThreadPool()
 
@@ -539,8 +547,7 @@ class GraftServer(
       val grouped = rows(Details.amendmentDetail(facts, schuze, bod))
       if (grouped == "[]")
         throw HttpError(404, s"No amendments for $schuze/$bod")
-      val count = facts
-        .filter(col("schuze") === schuze && col("bod") === bod).count()
+      val count = Details.ofAgendaItem(facts, schuze, bod).count()
       utf8(s"""{"schuze":$schuze,"bod":$bod,"amendment_count":$count,""" +
         s""""amendments":$grouped}""")
     }
@@ -842,6 +849,18 @@ object GraftServer {
     5 -> "2006", 4 -> "2002", 3 -> "1998", 2 -> "1996", 1 -> "1993")
 
   val DefaultPeriod = 10
+
+  /** Turn on TCP_NODELAY for the sockets the JDK's HTTP server accepts.
+    * The server writes a response's headers and its body as two
+    * segments; with Nagle's algorithm on (the JDK's default) the body
+    * waits for the ACK of the headers, which the client delays by up to
+    * 40 ms on Linux: every response, memoized or not, would wait that
+    * long. The JDK reads `sun.net.httpserver.nodelay` once per JVM, when
+    * the first `HttpServer` is created, so this runs before each create;
+    * a value the JVM was started with is kept.
+    */
+  private def enableNoDelay(): Unit =
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
 
   /** Hard ceiling on rows serialized into any JSON response — larger than
     * every legitimate route result (top ≤ 200, pages of 30), small enough

@@ -270,6 +270,69 @@ class GraftServerSpec extends SparkSpec {
     assert(get("/api/amendments/1/2/mp-votes?period=1&vote=6").statusCode() == 404)
   }
 
+  /** Janino compiles while `paths` after the first are served by a
+    * server whose laws and amendment facts hold five keys of one shape
+    * each (every law has one agenda entry, every agenda item a primary
+    * and a revote), so only the key differs between requests.
+    */
+  private def compilesAfterFirst(paths: Seq[String]): Long = {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val laws = DetailCts.map(ct => (ct + 1000L, ct, s"Zákon $ct", "přijato",
+        Seq("finance"), Seq("public finance")))
+      .toDF("id_tisk", "ct", "nazev", "status", "topics", "topics_en")
+    val bills = DetailCts.map(ct => (1, 1, ct - 190, ct.toString))
+      .toDF("period", "schuze", "bod", "ct")
+    val facts = DetailItems.flatMap { case (s, b) => Seq(
+        (s, b, "A", 1L, 100L + b, false, "accepted"),
+        (s, b, "A", 2L, 200L + b, true, "rejected")) }
+      .toDF("schuze", "bod", "letter", "vote_number", "id_hlasovani",
+        "is_revote", "result")
+    val srv = new GraftServer(Map(1 -> fixtureCatalog().copy(laws = Some(laws),
+      amendmentBills = Some(bills), amendmentFacts = Some(facts)))).start()
+    try {
+      def ok(p: String) = {
+        val r = get(p, s"http://127.0.0.1:${srv.boundPort}")
+        assert(r.statusCode() == 200, s"$p: ${r.body()}")
+      }
+      ok(paths.head)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      paths.tail.foreach(ok)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    } finally srv.stop()
+  }
+
+  private val DetailCts = 200 to 204
+  private val DetailItems = (1 to 5).map(i => (10 + i, 20 + i))
+
+  test("law detail keys reuse one compiled plan: after the first ct, 4 " +
+      "more distinct cts compile no janino class") {
+    assert(compilesAfterFirst(DetailCts.map(ct => s"/api/laws/$ct?period=1")) == 0)
+  }
+
+  test("amendment detail keys reuse one compiled plan: after the first " +
+      "(schuze, bod), 4 more distinct ones compile no janino class") {
+    assert(compilesAfterFirst(DetailItems.map { case (s, b) =>
+      s"/api/amendments/$s/$b?period=1" }) == 0)
+  }
+
+  test("a memoized response is not held back by Nagle's algorithm: the " +
+      "median of 30 keep-alive hits is under 20 ms") {
+    // with Nagle on, the body segment waits for the ACK of the headers,
+    // which the client delays by Linux's 40 ms minimum
+    val path = "/api/loyalty?period=1&top=13"
+    assert(get(path).statusCode() == 200)
+    assert(server.cache.get(GraftServer.key("loyalty", 1, 13, "")).isDefined)
+    val ms = (1 to 30).map { _ =>
+      val t0 = System.nanoTime()
+      val r = get(path)
+      assert(r.statusCode() == 200, r.body())
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(14) + ms(15)) / 2
+    assert(median < 20, s"median $median ms of ${ms.map(m => f"$m%.1f").mkString(", ")}")
+  }
+
   test("topics route unions law and vote topic labels, lang-aware " +
       "(get_all_topic_labels parity)") {
     val cs = get("/api/topics?period=1")
